@@ -334,7 +334,7 @@ def run(spark, args) -> dict:
         )
         from airbyte_spark.streaming.pipeline import _extract_winners
 
-        snap = _extract_winners(snap, F.lit(True))
+        snap = _extract_winners(snap)
         pipe.table.overwrite(target_projection(snap, pipe.cfg), stat_cols=["url"])
         return {"type": "SYNC_RESULT", "mode": "full_refresh", "rows": pipe.raw_state().count()}
 

@@ -39,7 +39,9 @@ Scale shape (the part that must survive 100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import reduce
+from operator import and_
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -90,8 +92,7 @@ def _prune_candidates(
     membership filter can prove a file holds none of the touched keys."""
     import numpy as np
 
-    spec = table.partition_spec()
-    bucket_fields = [f for f in spec.fields if f.transform == "bucket" and f.source == key_col]
+    bucket = _bucket_field(table, key_col)
 
     def pairs_for(bucket):
         if winner_hashes is None:
@@ -105,8 +106,8 @@ def _prune_candidates(
 
     out = []
     for e in table.files():
-        if bucket_fields:
-            b = e.partition.get(bucket_fields[0].name)
+        if bucket:
+            b = e.partition.get(bucket.name)
             if b is not None and int(b) not in batch_bounds:
                 continue
             b = int(b) if b is not None else None
@@ -126,6 +127,15 @@ def _prune_candidates(
                     continue
         out.append(e)
     return out
+
+
+def _bucket_field(table: TableFormat, key_col: str):
+    """The table's bucket partition field on `key_col`, or None."""
+    return next(
+        (f for f in table.partition_spec().fields
+         if f.transform == "bucket" and f.source == key_col),
+        None,
+    )
 
 
 def _merge_bounds(bounds: dict[int, tuple[str, str]]) -> tuple[str, str] | None:
@@ -186,20 +196,203 @@ def _window_sub_split(table: TableFormat, bucketed: bool, n_buckets: int) -> int
     return max(1, shuffle_parts // max(1, n_buckets))
 
 
+def order_key(cfg: StreamConfig) -> Column:
+    """The merge's total order as one comparable struct: the cursor, NULL
+    coalesced to the floor so it loses to every real cursor (≡ the merge
+    window's desc_nulls_last), then the tiebreakers. `max_by(x,
+    order_key(cfg))` picks the event the merge window would keep."""
+    floor_ts = F.lit("0001-01-01 00:00:00").cast("timestamp_ntz")
+    return F.struct(
+        F.coalesce(F.col(cfg.cursor_field), floor_ts).alias("c"),
+        *[F.col(c).alias(f"t{i}") for i, c in enumerate(cfg.order_tiebreakers)],
+    )
+
+
+@dataclass
+class BatchPlan:
+    """What the winner pre-pass learned about a change batch: everything a
+    commit needs before its merge job, from ONE planning collect.
+
+    - `winners`: each key's winning (key..., lsn), cached; the semi-join's
+      build side. A plan made with `segment_col` holds one winner per
+      (segment, key) plus its order key `_ord` instead; `combine` reduces
+      a chunk of segments to one winner per key.
+    - `bounds`: bucket → (lo, hi) lead-key range of its winners. A bucket
+      with a NULL-key winner gets (None, None): NULL merges null-safe, so
+      none of its files may be range-pruned.
+    - `winner_keys`: bucket → winner lead keys for Bloom pruning (None for
+      a NULL-key bucket); None as a whole when the table has no Bloom
+      sidecars, the batch is a bulk load, or the plan holds more than
+      BLOOM_PRUNE_KEY_MAX keys.
+    - `n_winners`: winner count for the broadcast gate (a sum over
+      segments for a `segment_col` or combined plan: an upper bound).
+    - `rows_in`, `max_lsn`: event count and LSN high-water mark.
+    - `segments`: segment id → its per-bucket stats (`segment_col` only).
+    """
+
+    winners: DataFrame
+    bounds: dict
+    winner_keys: "dict | None"
+    n_winners: int
+    rows_in: int
+    max_lsn: int | None
+    segments: dict = field(default_factory=dict)
+
+    def combine(self, segment_ids: list[int], cfg: StreamConfig) -> "BatchPlan":
+        """The plan of one grouped commit over some segments of a
+        `segment_col` plan, with no Spark job: bounds, winner keys, rows_in
+        and max_lsn equal `plan_batch` over the union of those segments.
+        The cached per-segment winners reduce to one winner per key over
+        the same order key, so the merge shuffle moves one page per key
+        however many segments a catch-up commit groups."""
+        pk, lsn = cfg.primary_key, cfg.order_tiebreakers[-1]
+        winners = self.winners.filter(F.col("_seg").isin(segment_ids))
+        if len(segment_ids) > 1:
+            winners = winners.groupBy(*pk).agg(F.max_by(F.col(lsn), F.col("_ord")).alias(lsn))
+        stats = [s for i in segment_ids for s in self.segments[i]]
+        return _fold_plan(winners.select(*pk, lsn), stats)
+
+
+def _fold_plan(winners: DataFrame, stats: list[dict]) -> BatchPlan:
+    """Fold per-(segment, bucket) planning stats into one plan."""
+    bounds: dict = {}
+    keys: "dict | None" = {} if stats and "ks" in stats[0] else None
+    for s in stats:
+        b = int(s["b"])
+        lo, hi = (None, None) if s["knull"] else (s["lo"], s["hi"])
+        if b in bounds:
+            olo, ohi = bounds[b]
+            lo = None if olo is None or lo is None else min(olo, lo)
+            hi = None if ohi is None or hi is None else max(ohi, hi)
+        bounds[b] = (lo, hi)
+        if keys is None:
+            continue
+        if len(s["ks"]) > BLOOM_PRUNE_KEY_MAX:
+            keys = None  # one element past the cap marks overflow
+        elif s["knull"] or keys.get(b, ()) is None:
+            keys[b] = None
+        else:
+            keys[b] = keys.get(b, set()) | set(s["ks"])
+    if keys is not None and sum(len(v) for v in keys.values() if v) > BLOOM_PRUNE_KEY_MAX:
+        keys = None
+    return BatchPlan(
+        winners=winners,
+        bounds=bounds,
+        winner_keys=None if keys is None else {
+            b: None if v is None else list(v) for b, v in keys.items()
+        },
+        n_winners=sum(s["nw"] for s in stats),
+        rows_in=sum(s["n"] for s in stats),
+        max_lsn=max((s["mx"] for s in stats if s["mx"] is not None), default=None),
+    )
+
+
+def plan_batch(
+    table: TableFormat,
+    batch: DataFrame,
+    cfg: StreamConfig,
+    segment_col: str | None = None,
+) -> BatchPlan:
+    """The winner pre-pass: the one planner behind every commit path.
+
+    LATE MATERIALIZATION, the big-payload optimization: the pre-pass reads
+    only (key, order cols), so column pruning reaches the source, and picks
+    each key's winning lsn with max_by over `order_key`. Partial
+    aggregation collapses hot keys map-side (skew-proof), and its shuffle
+    moves ~|distinct keys| tiny rows instead of |events| full pages. The
+    cached winner set then feeds ONE small collect of per-bucket stats
+    (≤ n_buckets rows): key bounds, winner and event counts, the LSN
+    high-water mark and, when the table carries key Bloom sidecars, the
+    capped winner keys, so pruning gets membership evidence with no extra
+    job (a separate collect measured +8-15% on the per-commit serial floor).
+
+    Batch metrics ride these aggregates and never an `.observe()`: a
+    CollectMetrics node is a codegen fusion barrier, so the probe-side scan
+    would materialize every payload column for every event before the
+    winner semi-join drops most of them (~3× end-to-end on wide-payload
+    batches, see BASELINE.md).
+
+    With `segment_col` the winners and stats are per (segment, key) and
+    per (segment, bucket), so one pass over a whole backlog discovers its
+    segment ids and plans any grouping of them (`BatchPlan.combine`).
+
+    The caller owns the cached `winners` and unpersists it when done.
+    """
+    pk = cfg.primary_key
+    lead, lsn = pk[0], cfg.order_tiebreakers[-1]
+    bucket = _bucket_field(table, lead)
+    ordk = order_key(cfg)
+    seg = [F.col(segment_col).alias("_seg")] if segment_col else []
+    aggs = [
+        F.max_by(F.col(lsn), ordk).alias(lsn),
+        F.count(F.lit(1)).alias("_cnt"),
+        F.max(lsn).alias("_mx"),
+    ]
+    if segment_col:
+        aggs.append(F.max(ordk).alias("_ord"))  # the winner's order key
+    winners = batch.groupBy(*seg, *pk).agg(*aggs).persist()
+
+    stat_aggs = [
+        F.min(lead).alias("lo"),
+        F.max(lead).alias("hi"),
+        F.count(F.lit(1)).alias("nw"),
+        F.sum("_cnt").alias("n"),
+        F.max("_mx").alias("mx"),
+        F.max(F.col(lead).isNull()).alias("knull"),
+    ]
+    has_blooms = any("bloom" in (e.stats.get(lead) or {}) for e in table.files())
+    if has_blooms and segment_col is None:
+        est = _batch_size_estimate(batch)
+        if est != _SIZE_UNKNOWN and est > BLOOM_PRUNE_BATCH_BYTES_MAX:
+            has_blooms = False  # bulk load: bounds-only pruning
+    if has_blooms:
+        # capped: one element past the cap marks overflow. Aggregate
+        # buffers stay bounded: a group is one (segment, bucket).
+        stat_aggs.append(
+            F.slice(F.collect_set(F.col(lead)), 1, BLOOM_PRUNE_KEY_MAX + 1).alias("ks")
+        )
+    groups = [F.col("_seg")] if segment_col else []
+    bexpr = bucket.expr() if bucket else F.lit(0)
+    stats = [
+        r.asDict()
+        for r in winners.groupBy(*groups, bexpr.alias("b")).agg(*stat_aggs).collect()
+    ]
+    plan = _fold_plan(winners, stats)
+    if segment_col:
+        for s in stats:
+            plan.segments.setdefault(int(s["_seg"]), []).append(s)
+    return plan
+
+
+def _winning_events(batch: DataFrame, plan: BatchPlan, cfg: StreamConfig) -> DataFrame:
+    """The batch slimmed to its winning events, so the merge shuffle carries
+    winner payloads only: a semi-join on (key..., lsn), broadcast below
+    BROADCAST_WINNER_MAX winners. Null-safe: a winner with a NULL last
+    tiebreaker must survive (plain `=` drops NULLs); key columns join
+    null-safe too for uniformity."""
+    cols = [*cfg.primary_key, cfg.order_tiebreakers[-1]]
+    wside = plan.winners.select(*cols).alias("_w")
+    if plan.n_winners <= BROADCAST_WINNER_MAX:
+        wside = F.broadcast(wside)
+    cond = reduce(and_, [F.col(f"_b.{c}").eqNullSafe(F.col(f"_w.{c}")) for c in cols])
+    return batch.alias("_b").join(wside, cond, "left_semi")
+
+
 def merge_upsert(
     table: TableFormat,
     batch: DataFrame,
     cfg: StreamConfig,
     checkpoint_key: "str | list[str] | None" = None,
     finalize: "callable | None" = None,
-    observe_metrics: bool = True,
-    precomputed: dict | None = None,
+    plan: BatchPlan | None = None,
 ) -> MergeStats:
     """Apply one change batch to the target table (intra-batch dedup is part
     of the merge window — raw micro-batches are fine).
 
-    `finalize(df, is_batch_col)` — optional projection hook applied to the
-    winning rows (e.g. vectorized text extraction for fresh rows only).
+    `finalize(df)` — optional projection hook (e.g. vectorized text
+    extraction) applied to the slimmed batch, i.e. once per (key, winning
+    event), before the merge window. Carried-over rows never reach it; a
+    batch row that then loses to a stored row is dropped by the window.
 
     Composite primary keys are first-class (≡ the reference's list-valued
     source_defined_primary_key, airbyte_protocol.yaml:150, and the
@@ -213,26 +406,11 @@ def merge_upsert(
     keys are all in the manifest's committed set is skipped before any
     work, and every constituent segment is recorded on commit.
 
-    `precomputed` (optional, from CdcPipeline.replay's single planning
-    pass over all pending segments): {"bounds": {bucket: (lo, hi)},
-    "n_winners_max": int, "rows_in": int, "max_lsn": int}. When present,
-    the per-batch winner/bounds job and its driver collect are SKIPPED —
-    the whole batch applies as ONE Spark job (winner groupBy folds into
-    the broadcast build inside the merge job). This halves driver
-    round-trips per micro-batch; at high-frequency micro-batching the
-    per-job scheduling latency is the serial floor that caps scaling.
-    Bounds may be batch-level (superset of winner bounds) — pruning stays
-    correct, merely a touch less tight.
-
-    Batch metrics (rows_in, lsn high-water mark) are NEVER collected via
-    `.observe()`: a CollectMetrics node is a codegen fusion barrier, so
-    with it the probe-side scan would materialize EVERY payload column
-    (html and all) for EVERY event before the winner semi-join drops ~97%
-    of them; without it, whole-stage codegen defers payload expression
-    evaluation to rows that survive the join — measured ~3× end-to-end on
-    wide-payload batches (see BASELINE.md). Metrics instead ride the
-    column-pruned winner pre-pass as per-key aggregates (or arrive
-    precomputed from the replay planning pass).
+    `plan` is the batch's winner pre-pass (`plan_batch`); without one the
+    merge plans the batch itself. Either way a commit is one planning
+    collect (none with a given plan) followed by the one merge job: the
+    plan's bounds and winner keys prune candidate files at the driver, its
+    winners slim the batch, and its rows_in/max_lsn are the batch metrics.
     """
     keys = (
         [checkpoint_key]
@@ -244,150 +422,43 @@ def merge_upsert(
         if all(k in committed for k in keys):
             return MergeStats(version=table.current_version(), candidate_files=0, skipped=True)
 
-    pk_cols = cfg.primary_key
-    lead_key = pk_cols[0]  # bucketing / pruning column
+    lead_key = cfg.primary_key[0]  # bucketing / pruning column
 
     # Evolve target schema if the batch carries new/widened payload columns.
-    batch_payload = batch.select(*payload_columns(batch))
-    table.evolve_schema(batch_payload.schema)
+    table.evolve_schema(batch.select(*payload_columns(batch)).schema)
     target_schema = table.schema()
+    bucket = _bucket_field(table, lead_key)
 
-    spec = table.partition_spec()
-    bucket_fields = [
-        f for f in spec.fields if f.transform == "bucket" and f.source == lead_key
-    ]
-
-    lsn = cfg.order_tiebreakers[-1]
-    bexpr = bucket_fields[0].expr() if bucket_fields else F.lit(0)
-
-    # LATE MATERIALIZATION — the big-payload optimization. Pass 1 reads
-    # only (key, order cols) — column pruning reaches the source — and
-    # picks each key's winning event id with max_by: partial aggregation
-    # collapses hot keys map-side (skew-proof), and its shuffle moves
-    # ~|distinct keys| tiny rows instead of |events| full pages. The batch
-    # is then slimmed with a semi-join on the winner (key, lsn), so the
-    # merge shuffle carries winner payloads only. At 10^10 events with KB
-    # pages this cuts shuffled bytes by the per-key update factor.
-    floor_ts = F.lit("0001-01-01 00:00:00").cast("timestamp_ntz")
-    ordc = F.struct(
-        F.coalesce(F.col(cfg.cursor_field), floor_ts).alias("c"),
-        *[F.col(c).alias(f"t{i}") for i, c in enumerate(cfg.order_tiebreakers)],
-    )
     read_v = table.current_version()  # rewrite-vs-delete validation anchor
-    files_live = table.files()
-    # Bloom-prune prep happens INSIDE the existing winner/bounds job (or the
-    # replay planning pass): the per-bucket aggregate also collects the
-    # winner keys themselves — capped, 16 B/key as hash pairs — so pruning
-    # gets membership evidence with ZERO extra Spark jobs. A separate
-    # collect here measured +8-15% on the per-commit serial floor.
-    has_blooms = any("bloom" in (e.stats.get(lead_key) or {}) for e in files_live)
-    if has_blooms and precomputed is None:
-        est = _batch_size_estimate(batch)
-        if est != _SIZE_UNKNOWN and est > BLOOM_PRUNE_BATCH_BYTES_MAX:
-            has_blooms = False  # bulk load: bounds-only pruning
+    owned = plan is None
+    if owned:
+        plan = plan_batch(table, batch, cfg)
     winner_hashes = None
-    winners_owned = None
-    if precomputed is not None:
-        # planning pass already supplied bounds + metrics: no per-batch job.
-        # If it also materialized the winner set (cached), the broadcast
-        # build reads ~|keys| rows from memory instead of re-aggregating
-        # the batch.
-        winners = precomputed.get("winners")
-        if winners is None:
-            winners = batch.groupBy(*pk_cols).agg(F.max_by(F.col(lsn), ordc).alias(lsn))
-        bounds = precomputed["bounds"]
-        n_winners = precomputed["n_winners_max"]
-        rows_in, max_lsn = precomputed.get("rows_in"), precomputed.get("max_lsn")
-        wk = precomputed.get("winner_keys")
-        if wk is not None:
-            from airbyte_spark.lake.bloom import hash_pairs
+    if plan.winner_keys is not None:
+        from airbyte_spark.lake.bloom import hash_pairs
 
-            winner_hashes = {
-                b: (None if vals is None else hash_pairs(vals)) for b, vals in wk.items()
-            }
-    else:
-        # Winner pre-pass carries the batch metrics as per-key aggregates
-        # (NOT as an .observe() — CollectMetrics is a codegen-fusion
-        # barrier that would materialize full payloads for every event,
-        # see the docstring). The scan is column-pruned to key+order cols.
-        winners_owned = (
-            batch.groupBy(*pk_cols)
-            .agg(
-                F.max_by(F.col(lsn), ordc).alias(lsn),
-                F.count(F.lit(1)).alias("_cnt"),
-                F.max(lsn).alias("_mx"),
-            )
-            .persist()
-        )
+        winner_hashes = {
+            b: None if v is None else hash_pairs(v) for b, v in plan.winner_keys.items()
+        }
+    candidates = _prune_candidates(table, plan.bounds, lead_key, winner_hashes)
 
-        # Per-bucket [min,max] key bounds (+ winner count for the broadcast
-        # gate, rows/lsn metrics) come from the (tiny) winner set — one
-        # small collect (≤ n_buckets rows); this same job materializes
-        # the winner cache.
-        aggs = [
-            F.min(lead_key).alias("lo"),
-            F.max(lead_key).alias("hi"),
-            F.count(F.lit(1)).alias("nw"),
-            F.sum("_cnt").alias("n"),
-            F.max("_mx").alias("mx"),
-        ]
-        if has_blooms:
-            # the winner keys ride the same aggregate (capped: one element
-            # past the cap marks overflow → skip membership pruning; a
-            # NULL key marks the bucket unprunable — NULL merges null-safe)
-            aggs += [
-                F.slice(
-                    F.collect_set(F.col(lead_key)), 1, BLOOM_PRUNE_KEY_MAX + 1
-                ).alias("ks"),
-                F.max(F.col(lead_key).isNull()).alias("knull"),
-            ]
-        bounds_rows = winners_owned.groupBy(bexpr.alias("b")).agg(*aggs).collect()
-        # A bucket whose only winners carry NULL keys still needs its files
-        # read (NULL merges null-safe), so it stays in bounds with open ends.
-        bounds = {int(r["b"]): (r["lo"], r["hi"]) for r in bounds_rows}
-        n_winners = sum(r["nw"] for r in bounds_rows)
-        if observe_metrics and bounds_rows:
-            rows_in = sum(r["n"] for r in bounds_rows)
-            max_lsn = max((r["mx"] for r in bounds_rows if r["mx"] is not None), default=None)
-        else:
-            rows_in, max_lsn = None, None
-        winners = winners_owned.select(*pk_cols, lsn)
-        if has_blooms and not any(
-            len(r["ks"]) > BLOOM_PRUNE_KEY_MAX for r in bounds_rows
-        ):
-            from airbyte_spark.lake.bloom import hash_pairs
-
-            winner_hashes = {
-                int(r["b"]): (None if r["knull"] else hash_pairs(r["ks"]))
-                for r in bounds_rows
-            }
-    candidates = _prune_candidates(table, bounds, lead_key, winner_hashes) if files_live else []
-
-    # Null-safe equality on the lsn (a winning event with a NULL last
-    # tiebreaker must still survive the slim — plain `=` drops NULLs);
-    # key columns join null-safe too for uniformity.
-    wside = winners.select(*pk_cols, lsn).alias("_w")
-    wjoin = F.broadcast(wside) if n_winners <= BROADCAST_WINNER_MAX else wside
-    cond = None
-    for c in [*pk_cols, lsn]:
-        eq = F.col(f"_b.{c}").eqNullSafe(F.col(f"_w.{c}"))
-        cond = eq if cond is None else cond & eq
-    slim = batch.alias("_b").join(wjoin, cond, "left_semi")
+    slim = _winning_events(batch, plan, cfg)
+    if finalize is not None:
+        slim = finalize(slim)
     existing = table.read(files=candidates)
 
     # Sub-split each bucket's window partition by a key-hash salt: the
     # lag-head trick only needs all rows of ONE key in one partition, not
     # one partition per bucket — without this, merge parallelism is capped
     # at n_buckets no matter the cluster size.
-    sub_k = _window_sub_split(table, bool(bucket_fields), bucket_fields[0].n if bucket_fields else 1)
+    sub_k = _window_sub_split(table, bool(bucket), bucket.n if bucket else 1)
 
     merged = resolve_merge(
         existing,
         slim,
         cfg,
         target_schema.fieldNames(),
-        bucket_expr=bexpr,
-        finalize=finalize,
+        bucket_expr=bucket.expr() if bucket else F.lit(0),
         sub_split=sub_k,
     )
 
@@ -396,24 +467,24 @@ def merge_upsert(
     entries = table._stage_write(
         merged,
         stat_cols=[lead_key, cfg.deleted_at_field],
-        one_file_per_partition=not bucket_fields,
+        one_file_per_partition=not bucket,
     )
-    if winners_owned is not None:
-        winners_owned.unpersist()
+    if owned:
+        plan.winners.unpersist()
     rows_removed = sum(e.rows for e in candidates)
     version = table.commit(
         entries,
         removed_paths={e.path for e in candidates},
         operation="merge",
         checkpoint_key=keys or None,
-        summary={"rows_removed": rows_removed, "candidate_files": len(candidates), "rows_in": rows_in},
+        summary={"rows_removed": rows_removed, "candidate_files": len(candidates), "rows_in": plan.rows_in},
         read_version=read_v,
     )
     return MergeStats(
         version=version,
         candidate_files=len(candidates),
-        rows_in=rows_in,
-        max_lsn=max_lsn,
+        rows_in=plan.rows_in,
+        max_lsn=plan.max_lsn,
     )
 
 
@@ -423,25 +494,24 @@ def append_winners(
     cfg: StreamConfig,
     checkpoint_key: "str | list[str] | None" = None,
     finalize: "callable | None" = None,
-    observe_metrics: bool = True,
-    precomputed: dict | None = None,
+    plan: BatchPlan | None = None,
 ) -> MergeStats:
     """Merge-on-read write path (≡ Iceberg v2 MoR upserts; ≡ the reference's
     append-to-raw-then-dedup-at-normalization model — BufferedStreamConsumer
     appends raw, stream_processor.py:695-768 dedups downstream): the batch's
-    per-key WINNERS (same max_by pre-pass + semi-join slim as merge_upsert,
-    so micro-batch dedup still happens at write) are APPENDED — existing
-    files are never read or rewritten. Commit cost is O(batch) regardless of
-    table size, which is the write-optimized end of the CDC trade: LWW
-    conflict resolution moves to read time (resolve_stored) and
+    per-key WINNERS (the same `plan_batch` pre-pass and semi-join slim as
+    merge_upsert, so micro-batch dedup still happens at write) are APPENDED
+    — existing files are never read or rewritten. Commit cost is O(batch)
+    regardless of table size, which is the write-optimized end of the CDC
+    trade: LWW conflict resolution moves to read time (resolve_stored) and
     compact_versions() restores the read-optimized single-version form.
 
-    Same exactly-once contract as merge_upsert: idempotent per
-    checkpoint_key (grouped catch-up lists record every segment id), same
-    finalize hook (text extraction runs once per appended winning version —
-    a later losing version never re-extracts, so the byte-identical
-    text-per-url invariant holds through read-time resolution, which picks
-    whole stored rows)."""
+    Same contract as merge_upsert: idempotent per checkpoint_key (grouped
+    catch-up lists record every segment id), the same optional `plan`, and
+    the same `finalize(df)` hook on the slimmed batch, so text extraction
+    runs once per appended winning version — a later losing version never
+    re-extracts, and the byte-identical text-per-url invariant holds
+    through read-time resolution, which picks whole stored rows."""
     keys = (
         [checkpoint_key]
         if isinstance(checkpoint_key, str)
@@ -452,65 +522,29 @@ def append_winners(
         if all(k in committed for k in keys):
             return MergeStats(version=table.current_version(), candidate_files=0, skipped=True)
 
-    pk_cols = cfg.primary_key
-    lead_key = pk_cols[0]
     table.evolve_schema(batch.select(*payload_columns(batch)).schema)
     target_schema = table.schema()
-
-    lsn = cfg.order_tiebreakers[-1]
-    floor_ts = F.lit("0001-01-01 00:00:00").cast("timestamp_ntz")
-    ordc = F.struct(
-        F.coalesce(F.col(cfg.cursor_field), floor_ts).alias("c"),
-        *[F.col(c).alias(f"t{i}") for i, c in enumerate(cfg.order_tiebreakers)],
-    )
-    winners_owned = None
-    if precomputed is not None:
-        winners = precomputed.get("winners")
-        if winners is None:
-            winners = batch.groupBy(*pk_cols).agg(F.max_by(F.col(lsn), ordc).alias(lsn))
-        n_winners = precomputed["n_winners_max"]
-        rows_in, max_lsn = precomputed.get("rows_in"), precomputed.get("max_lsn")
-    else:
-        winners_owned = (
-            batch.groupBy(*pk_cols)
-            .agg(
-                F.max_by(F.col(lsn), ordc).alias(lsn),
-                F.count(F.lit(1)).alias("_cnt"),
-                F.max(lsn).alias("_mx"),
-            )
-            .persist()
-        )
-        row = winners_owned.agg(
-            F.count(F.lit(1)).alias("nw"), F.sum("_cnt").alias("n"), F.max("_mx").alias("mx")
-        ).collect()[0]
-        n_winners = row["nw"]
-        rows_in, max_lsn = (row["n"], row["mx"]) if observe_metrics else (None, None)
-        winners = winners_owned.select(*pk_cols, lsn)
-
-    wside = winners.select(*pk_cols, lsn).alias("_w")
-    wjoin = F.broadcast(wside) if n_winners <= BROADCAST_WINNER_MAX else wside
-    cond = None
-    for c in [*pk_cols, lsn]:
-        eq = F.col(f"_b.{c}").eqNullSafe(F.col(f"_w.{c}"))
-        cond = eq if cond is None else cond & eq
-    slim = batch.alias("_b").join(wjoin, cond, "left_semi")
+    owned = plan is None
+    if owned:
+        plan = plan_batch(table, batch, cfg)
+    slim = _winning_events(batch, plan, cfg)
     if finalize is not None:
-        slim = finalize(slim, F.lit(True))  # every appended row is a fresh winner
+        slim = finalize(slim)
 
     entries = table._stage_write(
         align_to_schema(slim, target_schema),
-        stat_cols=[lead_key, cfg.deleted_at_field],
+        stat_cols=[cfg.primary_key[0], cfg.deleted_at_field],
         one_file_per_partition=True,
     )
-    if winners_owned is not None:
-        winners_owned.unpersist()
+    if owned:
+        plan.winners.unpersist()
     version = table.commit(
         entries,
         operation="append-winners",
         checkpoint_key=keys or None,
-        summary={"rows_in": rows_in},
+        summary={"rows_in": plan.rows_in},
     )
-    return MergeStats(version=version, candidate_files=0, rows_in=rows_in, max_lsn=max_lsn)
+    return MergeStats(version=version, candidate_files=0, rows_in=plan.rows_in, max_lsn=plan.max_lsn)
 
 
 def resolve_stored(table: TableFormat, cfg: StreamConfig, version: int | None = None) -> DataFrame:
@@ -520,17 +554,15 @@ def resolve_stored(table: TableFormat, cfg: StreamConfig, version: int | None = 
     Tombstones survive as soft-delete rows — callers filter active rows.
     Cost grows with retained versions per key; compact_versions() resets it."""
     df = table.read(version)
-    lead = cfg.primary_key[0]
-    spec = table.partition_spec()
-    bucket_fields = [f for f in spec.fields if f.transform == "bucket" and f.source == lead]
-    sub_k = _window_sub_split(table, bool(bucket_fields), bucket_fields[0].n if bucket_fields else 1)
+    bucket = _bucket_field(table, cfg.primary_key[0])
+    sub_k = _window_sub_split(table, bool(bucket), bucket.n if bucket else 1)
     empty = table.spark.createDataFrame([], df.schema)
     return resolve_merge(
         empty,
         df,
         cfg,
         df.columns,
-        bucket_expr=bucket_fields[0].expr() if bucket_fields else None,
+        bucket_expr=bucket.expr() if bucket else None,
         sub_split=sub_k,
     )
 
@@ -569,7 +601,6 @@ def resolve_merge(
     cfg: StreamConfig,
     out_cols: list[str],
     bucket_expr: Column | None = None,
-    finalize: "callable | None" = None,
     sub_split: int = 1,
 ) -> DataFrame:
     """Pure-DataFrame restatement of the MERGE cases as ONE window pass.
@@ -619,8 +650,6 @@ def resolve_merge(
     is_winner = prev_key.isNull() | (prev_key != key_tuple)
 
     kept = both.withColumn("_win", is_winner).filter(F.col("_win"))
-    if finalize is not None:
-        kept = finalize(kept, F.col("_is_batch") == 1)
     have = set(kept.columns)
     return kept.select(
         *[

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from airbyte_spark.lake.merge import order_key
 from airbyte_spark.protocol import StreamConfig
 
 
@@ -50,15 +51,12 @@ def presalted_dedup(df: DataFrame, cfg: StreamConfig, salt_buckets: int = 16) ->
     sees more than ~|events|/salt_buckets of a hot key.
 
     Equivalent to dedup_batch for any input (tested); use when a stream
-    has pathological per-key event counts. The cursor is coalesced to the
-    epoch floor so NULL cursors lose to everything (desc_nulls_last).
+    has pathological per-key event counts. Both phases rank by the merge's
+    order key (lake/merge.order_key), under which NULL cursors lose to
+    everything (desc_nulls_last).
     """
     key = cfg.primary_key
-    floor_ts = F.lit("0001-01-01 00:00:00").cast("timestamp_ntz")
-    ord_expr = F.struct(
-        F.coalesce(F.col(cfg.cursor_field), floor_ts).alias("c"),
-        *[F.col(c).alias(f"t{i}") for i, c in enumerate(cfg.order_tiebreakers)],
-    )
+    ord_expr = order_key(cfg)
     payload = F.struct(*[F.col(c) for c in df.columns])
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in cfg.order_tiebreakers]), F.lit(salt_buckets))
     phase1 = (

@@ -32,64 +32,29 @@ from airbyte_spark.lake.table_format import (
     TableFormatFactory,
 )
 from airbyte_spark.lake.merge import (
-    BLOOM_PRUNE_KEY_MAX as _PLAN_KEYS_MAX,
+    BatchPlan,
     append_winners,
     merge_upsert,
+    plan_batch,
     resolve_stored,
 )
 from airbyte_spark.protocol import StreamConfig
 from airbyte_spark.schema import CHANGE_SCHEMA, PAGE_SCHEMA, TARGET_META_COLS
 
 
-def _extract_winners(df: DataFrame, is_batch) -> DataFrame:
-    """Vectorized HTML→text for freshly-merged live rows only; carried-over
-    rows keep their stored text and tombstones skip the UDF entirely
-    (byte-identical invariant: the rule is pinned in functions/extract.py
+def _extract_winners(df: DataFrame) -> DataFrame:
+    """Vectorized HTML→text for a slimmed batch: one row per (key, winning
+    event), the only rows that reach the UDF (the merge applies this before
+    its window, so carried-over rows keep their stored text). A Python UDF
+    inside CASE WHEN still sees every input row, so tombstones and NULL
+    pages keep their incoming text by the condition, not by skipping the
+    UDF (byte-identical invariant: the rule is pinned in functions/extract.py
     and applied exactly once per winning version)."""
-    fresh_live = is_batch & F.col("html").isNotNull() & F.col("_ab_cdc_deleted_at").isNull()
+    fresh_live = F.col("html").isNotNull() & F.col("_ab_cdc_deleted_at").isNull()
     return df.withColumn(
         "text",
         F.when(fresh_live, extract_text(F.col("html"))).otherwise(F.col("text")),
     )
-
-
-def _merge_plans(plans: list[dict]) -> dict:
-    """Combine per-segment planning stats into one grouped-commit plan."""
-    out = {"bounds": {}, "n_winners_max": 0, "rows_in": 0, "max_lsn": None}
-    keys: "dict | None" = {}
-    for p in plans:
-        for b, (lo, hi) in p["bounds"].items():
-            if b in out["bounds"]:
-                olo, ohi = out["bounds"][b]
-                # a (None, None) entry (all-NULL-key winners) widens to open
-                lo = None if (olo is None or lo is None) else min(olo, lo)
-                hi = None if (ohi is None or hi is None) else max(ohi, hi)
-                out["bounds"][b] = (lo, hi)
-            else:
-                out["bounds"][b] = (lo, hi)
-        out["n_winners_max"] += p["n_winners_max"]
-        out["rows_in"] += p["rows_in"]
-        if p["max_lsn"] is not None:
-            out["max_lsn"] = (
-                p["max_lsn"]
-                if out["max_lsn"] is None
-                else max(out["max_lsn"], p["max_lsn"])
-            )
-        # winner keys union per bucket; None (overflow / NULL key) poisons
-        pk = p.get("winner_keys")
-        if keys is not None:
-            if pk is None:
-                keys = None
-            else:
-                for b, vals in pk.items():
-                    if vals is None or keys.get(b, ...) is None:
-                        keys[b] = None
-                    else:
-                        keys[b] = keys.get(b, []) + list(vals)
-    if keys is not None and sum(len(v) for v in keys.values() if v) > _PLAN_KEYS_MAX:
-        keys = None
-    out["winner_keys"] = keys
-    return out
 
 
 def default_target_schema():
@@ -123,7 +88,6 @@ class CdcPipeline:
     table: TableFormat
     cfg: StreamConfig
     extract: bool = True
-    collect_batch_metrics: bool = True
     # two-phase salted pre-dedup for pathological per-key event counts
     # (north-star url-hash salting); None = rely on the merge window alone
     salt_hot_keys: int | None = None
@@ -197,10 +161,12 @@ class CdcPipeline:
         self,
         batch: DataFrame,
         checkpoint_key: "str | list[str]",
-        precomputed: dict | None = None,
+        plan: BatchPlan | None = None,
     ) -> BatchResult:
         """One fused merge pass (intra-batch dedup + LWW + tombstones live in
-        the merge window; text extraction runs only on fresh winning rows).
+        the merge window; text extraction runs once per winning event, on
+        the slimmed batch). `plan` is the batch's `plan_batch` pre-pass when
+        the caller already has one (replay); otherwise the merge plans.
         Idempotent per checkpoint key; a list of keys commits several binlog
         segments in one merge while recording each segment id individually
         (so a later replay with a different grouping skips exactly what was
@@ -227,8 +193,7 @@ class CdcPipeline:
             self.cfg,
             checkpoint_key=keys,
             finalize=finalize,
-            observe_metrics=self.collect_batch_metrics,
-            precomputed=precomputed,
+            plan=plan,
         )
         res = BatchResult(
             label, False, stats.rows_in, stats.max_lsn, time.time() - t0,
@@ -292,8 +257,8 @@ class CdcPipeline:
         segment granularity. In steady state (one pending segment) it is
         exactly one commit per segment. Every constituent segment id is
         recorded in the committed set."""
-        seg_stats, winners_all = self._plan_replay(changelog)
-        ids = sorted(seg_stats)
+        plan = self._plan_replay(changelog)
+        ids = sorted(plan.segments)
         if from_checkpoint is not None:
             ids = [i for i in ids if i >= from_checkpoint]
         committed = self.table.committed()
@@ -309,132 +274,30 @@ class CdcPipeline:
         try:
             for g in range(0, len(pending), group_size):
                 chunk = pending[g : g + group_size]
-                plan = _merge_plans([seg_stats[c] for c in chunk])
-                # reduce the chunk's per-(segment, key) winners to ONE
-                # winner per key (max over the same total order the merge
-                # window uses) — the payload semi-join then moves one page
-                # per key, not one per (segment, key): a catch-up drain's
-                # merge shuffle stays O(keys) no matter how many segments
-                # it groups. Exactly the batch.groupBy(pk) pre-pass the
-                # non-precomputed merge path runs, folded into the cached
-                # winner table.
-                pk = self.cfg.primary_key
-                lsn = self.cfg.order_tiebreakers[-1]
-                chunk_winners = winners_all.filter(
-                    F.col("_seg").isin([int(c) for c in chunk])
-                )
-                if len(chunk) > 1:
-                    chunk_winners = chunk_winners.groupBy(*pk).agg(
-                        F.max_by(F.col(lsn), F.col("_ord")).alias(lsn)
-                    )
-                plan["winners"] = chunk_winners.select(*pk, lsn)
-                sub = changelog.filter(F.col("checkpoint_id").isin([int(c) for c in chunk]))
+                sub = changelog.filter(F.col("checkpoint_id").isin(chunk))
                 out.append(
                     self.apply_batch(
                         sub,
                         checkpoint_key=[f"ckpt-{c}" for c in chunk],
-                        precomputed=plan,
+                        plan=plan.combine(chunk, self.cfg),
                     )
                 )
         finally:
-            winners_all.unpersist()
+            plan.winners.unpersist()
         return out
 
-    def _plan_replay(self, changelog: DataFrame) -> tuple[dict[int, dict], DataFrame]:
-        """ONE planning pass over the changelog: materialize the per-
-        (segment, key) WINNER set (max_by over the total order) plus
-        per-key event counts, then aggregate winner-level bucket bounds,
-        exact winner counts, rows_in and lsn high-water marks per segment
-        from the tiny cached winner table. This both DISCOVERS the pending
-        segment ids and lets every subsequent merge commit run as a single
-        Spark job whose broadcast build reads winners from cache — no
-        per-batch winner scan, no separate distinct() id scan, no extra
+    def _plan_replay(self, changelog: DataFrame) -> BatchPlan:
+        """ONE planning pass over the whole changelog (`plan_batch` per
+        (segment, key)): it DISCOVERS the segment ids and plans every
+        grouped commit (`BatchPlan.combine`), so each commit runs as a
+        single Spark job whose broadcast build reads winners from cache —
+        no per-commit pre-pass, no separate distinct() id scan, no extra
         driver collects. Per-job scheduling latency is the serial floor of
         high-frequency micro-batching; this keeps it O(1) per catch-up
-        instead of O(batches), and the full changelog is scanned exactly
-        twice per catch-up (planning + merge probe) regardless of the
-        number of commits. A grouped commit unions its segments' winner
-        sets — at most group_size candidate events per key reach the merge
-        window, which resolves them exactly like any redelivery."""
-        spec = self.table.partition_spec()
-        pk = self.cfg.primary_key
-        lead = pk[0]
-        bucket_fields = [
-            f for f in spec.fields if f.transform == "bucket" and f.source == lead
-        ]
-        bexpr = bucket_fields[0].expr() if bucket_fields else F.lit(0)
-        lsn = self.cfg.order_tiebreakers[-1]
-        floor_ts = F.lit("0001-01-01 00:00:00").cast("timestamp_ntz")
-        ordc = F.struct(
-            F.coalesce(F.col(self.cfg.cursor_field), floor_ts).alias("c"),
-            *[F.col(c).alias(f"t{i}") for i, c in enumerate(self.cfg.order_tiebreakers)],
-        )
-        winners_all = (
-            changelog.groupBy(F.col("checkpoint_id").alias("_seg"), *pk)
-            .agg(
-                F.max_by(F.col(lsn), ordc).alias(lsn),
-                F.count(F.lit(1)).alias("_cnt"),
-                F.max(lsn).alias("_mx"),
-                # the winning row's full order key (max over the struct ==
-                # ordc of the max_by row): lets a grouped catch-up commit
-                # reduce its segments' winners to ONE winner per key before
-                # the payload semi-join (see replay) — without it the merge
-                # would shuffle group_size pages per key instead of one
-                F.max(ordc).alias("_ord"),
-            )
-            .persist()
-        )
-        aggs = [
-            F.min(lead).alias("lo"),
-            F.max(lead).alias("hi"),
-            F.count(F.lit(1)).alias("nw"),
-            F.sum("_cnt").alias("n"),
-            F.max("_mx").alias("mx"),
-        ]
-        # when the target already carries key Bloom sidecars, the winner
-        # keys ride this same planning aggregate (capped) so per-commit
-        # membership pruning needs no extra job — see merge._prune_candidates.
-        # Aggregate-buffer memory is bounded here by construction: groups are
-        # (segment, bucket), and a segment is one bounded micro-batch.
-        has_blooms = any(
-            "bloom" in (e.stats.get(lead) or {}) for e in self.table.files()
-        )
-        if has_blooms:
-            aggs += [
-                F.slice(F.collect_set(F.col(lead)), 1, _PLAN_KEYS_MAX + 1).alias("ks"),
-                F.max(F.col(lead).isNull()).alias("knull"),
-            ]
-        rows = (
-            winners_all.groupBy(F.col("_seg").alias("g"), bexpr.alias("b"))
-            .agg(*aggs)
-            .collect()
-        )
-        plans: dict[int, dict] = {}
-        for r in rows:
-            p = plans.setdefault(
-                int(r["g"]),
-                {
-                    "bounds": {},
-                    "n_winners_max": 0,
-                    "rows_in": 0,
-                    "max_lsn": None,
-                    "winner_keys": {} if has_blooms else None,
-                },
-            )
-            # keep NULL-lo buckets (all-NULL-key winners) with open bounds:
-            # their files must still be read, NULL merges null-safe
-            p["bounds"][int(r["b"])] = (r["lo"], r["hi"])
-            p["n_winners_max"] += r["nw"]
-            p["rows_in"] += r["n"]
-            p["max_lsn"] = (
-                r["mx"] if p["max_lsn"] is None else max(p["max_lsn"], r["mx"])
-            )
-            if has_blooms:
-                if len(r["ks"]) > _PLAN_KEYS_MAX:
-                    p["winner_keys"] = None  # overflow → skip membership pruning
-                elif p["winner_keys"] is not None:
-                    p["winner_keys"][int(r["b"])] = None if r["knull"] else list(r["ks"])
-        return plans, winners_all
+        instead of O(commits), and the changelog is scanned exactly twice
+        per catch-up (planning + merge probe) however many commits drain
+        it."""
+        return plan_batch(self.table, changelog, self.cfg, segment_col="checkpoint_id")
 
     def replay_dir(self, changelog_dir: str, **kw) -> list[BatchResult]:
         """Replay from a materialized changelog directory; checkpoint_id is
