@@ -1153,13 +1153,17 @@ def q_sync_segmented_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed-checkpoint set live in immutable segment files, so a commit
     writes one small head + only its DELTA — O(batch) metadata per commit
     instead of O(live files), the property that keeps per-commit driver
-    work flat at a 100 TB / ~200k-file table. The query drives appends
-    (old segments must carry forward BY REFERENCE), a row-level DELETE
-    (only the touched segment rewrites), and committed-tail sealing, then
-    returns the table — results must be byte-identical to the inline form,
-    which is what the oracle states in plain SQL."""
+    work flat at a 100 TB / ~200k-file table. A table takes that form by
+    size alone, so for its duration the query lowers the format module's
+    size thresholds (files: any, committed tail: 2 keys) and restores them
+    after. It drives appends (old segments must carry forward BY
+    REFERENCE), a row-level DELETE (only the touched segment rewrites), and
+    committed-tail sealing, then returns the table — results must be
+    byte-identical to the inline form, which is what the oracle states in
+    plain SQL."""
     import json as _json
 
+    from airbyte_spark.lake import format as _fmt
     from airbyte_spark.lake.dml import delete_where
     from airbyte_spark.lake.format import LakeTable, PartitionSpec
 
@@ -1167,37 +1171,36 @@ def q_sync_segmented_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
     base = tempfile.mkdtemp(prefix="airbyte_spark_segm_")
-    t = LakeTable.create(
-        spark,
-        base + "/events_segm",
-        src.schema,
-        PartitionSpec(),
-        properties={"manifest.segmented": "true", "manifest.committed_tail": "2"},
-    )
-    for i in range(4):
-        t.append(
-            src.filter(F.col("event_id") % 4 == i),
-            checkpoint_key=f"seg-{i}",
-            stat_cols=["event_id"],
-        )
+    saved = _fmt._AUTO_SEGMENT_FILES, _fmt._COMMITTED_TAIL
+    _fmt._AUTO_SEGMENT_FILES, _fmt._COMMITTED_TAIL = 0, 2
+    try:
+        t = LakeTable.create(spark, base + "/events_segm", src.schema, PartitionSpec())
+        for i in range(4):
+            t.append(
+                src.filter(F.col("event_id") % 4 == i),
+                checkpoint_key=f"seg-{i}",
+                stat_cols=["event_id"],
+            )
 
-    def _raw(v):
-        with open(f"{t.path}/_lake/v{v:09d}.json") as fh:
-            return _json.load(fh)
+        def _raw(v):
+            with open(f"{t.path}/_lake/v{v:09d}.json") as fh:
+                return _json.load(fh)
 
-    head = _raw(t.current_version())
-    assert head["files"] == [] and head["file_segments"], "head must hold refs only"
-    assert head.get("committed_segments"), "committed tail must have sealed"
-    # O(delta) evidence: every segment ref of the pre-append head survives
-    # the last append untouched (carried by reference, not rewritten)
-    prev_refs = {r["path"] for r in _raw(t.current_version() - 1)["file_segments"]}
-    assert prev_refs <= {r["path"] for r in head["file_segments"]}
-    delete_where(t, "event_type = 'error'")
-    # exactly-once guard must see sealed keys: redelivery is a no-op
-    v = t.current_version()
-    t.append(src.limit(7), checkpoint_key="seg-1")
-    assert t.current_version() == v
-    assert set(t.committed()) >= {f"seg-{i}" for i in range(4)}
+        head = _raw(t.current_version())
+        assert head["files"] == [] and head["file_segments"], "head must hold refs only"
+        assert head.get("committed_segments"), "committed tail must have sealed"
+        # O(delta) evidence: every segment ref of the pre-append head survives
+        # the last append untouched (carried by reference, not rewritten)
+        prev_refs = {r["path"] for r in _raw(t.current_version() - 1)["file_segments"]}
+        assert prev_refs <= {r["path"] for r in head["file_segments"]}
+        delete_where(t, "event_type = 'error'")
+        # exactly-once guard must see sealed keys: redelivery is a no-op
+        v = t.current_version()
+        t.append(src.limit(7), checkpoint_key="seg-1")
+        assert t.current_version() == v
+        assert set(t.committed()) >= {f"seg-{i}" for i in range(4)}
+    finally:
+        _fmt._AUTO_SEGMENT_FILES, _fmt._COMMITTED_TAIL = saved
     return t.read().select("event_id", "ts", "user_id", "event_type", "value", "props")
 
 

@@ -50,7 +50,7 @@ Commands:
                                  N snapshots (+ orphan manifest segments)
   properties --target T [--set k=v ...] [--unset k ...]
                                  read/update table properties (bloom.key,
-                                 manifest.segmented, constraint.*, ...)
+                                 sort.order, constraint.*, ...)
   expire-snapshots --target T [--retain-last N]
                                  bound the manifest chain: keep the newest N
                                  snapshot heads (time travel below the floor

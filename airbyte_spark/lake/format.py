@@ -7,8 +7,10 @@ swap, destination-jdbc JdbcBufferedConsumerFactory.java:153-194, and we'd
 get from Iceberg in deployment):
 
   1. atomic commits — a snapshot manifest is the unit of visibility,
-     created with O_EXCL so concurrent writers conflict instead of corrupt
-     (optimistic concurrency, Iceberg-style);
+     published by one no-replace hard link of a fully written, fsynced
+     file, so concurrent writers conflict instead of corrupt (optimistic
+     concurrency, Iceberg-style) and no reader sees a torn manifest. Every
+     metadata change goes through one publish loop, LakeTable._publish;
   2. snapshot isolation + time travel — readers resolve the latest (or any
      historical) manifest and only see files listed there;
   3. schema evolution — each file records the schema_id it was written
@@ -27,13 +29,14 @@ Scale notes (the design point is a 1000-executor cluster / 100 TB table):
   - data layout is hash-bucketed on the merge key (PartitionSpec bucket
     transform): a micro-batch only rewrites the buckets its keys hash to;
   - manifest size grows with file count, not rows; at 100 TB with ~512 MB
-    files that is ~200k entries. Past a threshold (or forced by the
-    manifest.segmented property) the table auto-upgrades to SEGMENTED
-    manifests — the Iceberg manifest-list shape in JSON: file list and
-    committed-key set live in immutable segment files, the head carries
-    {path, n} refs, and a commit writes O(delta) metadata instead of
-    re-serializing O(live files) (measured 28× at 50k files,
-    scripts/manifest_bench.py; see _dehydrate/_hydrate).
+    files that is ~200k entries. Once the file list (or committed-key set)
+    outgrows a fixed size the table moves to SEGMENTED manifests — the
+    Iceberg manifest-list shape in JSON: file list and committed-key set
+    live in immutable segment files, the head carries {path, n} refs, and
+    a commit writes O(delta) metadata instead of re-serializing O(live
+    files) (measured 28× at 50k files, scripts/manifest_bench.py; see
+    _dehydrate/_hydrate). Size is the only switch: there is no per-table
+    knob.
 
 Everything here is driver-side metadata handling (small JSON); all data
 movement is Spark DataFrame reads/writes.
@@ -58,12 +61,10 @@ _LAKE_DIR = "_lake"
 _DATA_DIR = "data"
 _SEG_DIR = "segs"  # immutable manifest segments, shared by main + branches
 
-# Segmented-manifest defaults (per-table overrides via properties
-# manifest.segment_threshold / manifest.committed_tail / manifest.max_segments;
-# manifest.segmented = "true"/"false" forces the format):
-# a table auto-upgrades to segmented manifests once its inline file list or
-# committed-key set crosses these sizes — the point where rewriting the full
-# list per commit stops being O(small).
+# Segmented-manifest sizes: a table moves its file list (committed-key set)
+# into segments once the inline list crosses _AUTO_SEGMENT_FILES
+# (_COMMITTED_TAIL) entries — the point where rewriting the full list per
+# commit stops being O(small) — and merges segments past _MAX_SEGMENTS.
 _AUTO_SEGMENT_FILES = 1000
 _COMMITTED_TAIL = 1000
 _MAX_SEGMENTS = 64
@@ -228,6 +229,15 @@ def _collect_parquet_stats(
     return rows, size, stats
 
 
+def _fsync_dir(path: str) -> None:
+    """Make a directory's entries (a just-linked manifest name) durable."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 # --- table ------------------------------------------------------------------------
 
 
@@ -285,10 +295,7 @@ class LakeTable:
 
     @staticmethod
     def exists(path: str) -> bool:
-        d = os.path.join(os.path.abspath(path), _LAKE_DIR)
-        return os.path.isdir(d) and any(
-            f.startswith("v") and f.endswith(".json") for f in os.listdir(d)
-        )
+        return bool(LakeTable(None, path)._versions())
 
     # ---- manifest I/O ----
 
@@ -299,14 +306,18 @@ class LakeTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self._meta_dir(), f"v{version:09d}.json")
 
-    def current_version(self) -> int | None:
+    def _versions(self) -> list[int]:
+        """Retained manifest versions of this handle's chain, ascending."""
         d = self._meta_dir()
         if not os.path.isdir(d):
-            return None
-        versions = [
+            return []
+        return sorted(
             int(f[1:-5]) for f in os.listdir(d) if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(versions) if versions else None
+        )
+
+    def current_version(self) -> int | None:
+        versions = self._versions()
+        return versions[-1] if versions else None
 
     def manifest(self, version: "int | str | None" = None) -> dict:
         # a string version is a tag name (≡ Iceberg VERSION AS OF 'tag')
@@ -318,15 +329,14 @@ class LakeTable:
 
     # ---- segmented manifests (≡ Iceberg manifest list → manifest files) ----
     #
-    # The inline form rewrites the FULL file list + committed-key set on
-    # every commit — O(live files) driver JSON work per commit, the
-    # documented swap point in the module docstring. The segmented form
-    # stores both lists in immutable side files under _lake/segs/ and the
-    # manifest head carries only {path, n} refs: a commit writes one small
-    # head + new segments for its DELTA (added files / fresh checkpoint
-    # keys) and rewrites only segments a removal touched. Hydration happens
-    # here, inside manifest(), so every reader and the whole CAS-loop
-    # writer surface see the exact inline dict shape they always did.
+    # A small table keeps its file list + committed-key set inline in the
+    # head, rewritten on every commit. Past the sizes above that becomes
+    # O(live files) driver JSON work per commit, so the lists move to
+    # immutable side files under _lake/segs/ and the head carries only
+    # {path, n} refs: a commit writes one small head + new segments for its
+    # DELTA (added files / fresh checkpoint keys) and rewrites only segments
+    # a removal touched. Hydration happens here, inside manifest(), so every
+    # reader and _publish see the same inline dict shape in both forms.
 
     def _load_segment(self, rel: str, lenient: bool = False) -> dict | None:
         ap = os.path.join(self.path, rel)
@@ -353,6 +363,8 @@ class LakeTable:
         os.makedirs(os.path.dirname(ap), exist_ok=True)
         with open(ap, "w") as fh:
             json.dump(payload, fh)
+            fh.flush()
+            os.fsync(fh.fileno())  # durable before any head can reference it
         while len(_SEG_CACHE) >= _SEG_CACHE_MAX:
             del _SEG_CACHE[next(iter(_SEG_CACHE))]
         _SEG_CACHE[ap] = payload
@@ -391,7 +403,7 @@ class LakeTable:
         """Convert a hydrated manifest back to its storage form, writing
         segment files for the parts that changed. Returns (storage dict,
         newly written segment rel-paths) — the caller GCs the new segments
-        if the O_EXCL publish loses its race.
+        if the publish fails or loses its race.
 
         Delta detection is structural: a prior file segment is kept BY
         REFERENCE iff every path it holds is still live (entries are
@@ -400,21 +412,12 @@ class LakeTable:
         equality with the segment contents — commit() only ever assigns
         fresh summaries for NEW keys, so equality cleanly separates the
         tail regardless of cache eviction.
-        Segment count is bounded LSM-style: past max_segments the smallest
+        Segment count is bounded LSM-style: past _MAX_SEGMENTS the smallest
         segments merge into one (amortized O(log) rewrites per entry)."""
         m = dict(manifest)
-        props = m.get("properties") or {}
-        forced = props.get("manifest.segmented")
-        if forced == "false":
-            m.pop("file_segments", None)
-            m.pop("committed_segments", None)
-            return m, []
-        thresh = int(props.get("manifest.segment_threshold", _AUTO_SEGMENT_FILES))
-        tail_cap = int(props.get("manifest.committed_tail", _COMMITTED_TAIL))
-        max_segs = max(2, int(props.get("manifest.max_segments", _MAX_SEGMENTS)))
         new_segs: list[str] = []
 
-        if forced == "true" or "file_segments" in m or len(m.get("files") or []) > thresh:
+        if "file_segments" in m or len(m.get("files") or []) > _AUTO_SEGMENT_FILES:
             files = list(m.get("files") or [])
             by_path = {f["path"]: f for f in files}
             covered: set[str] = set()
@@ -439,9 +442,9 @@ class LakeTable:
                 rel = self._write_segment({"entries": fresh})
                 new_segs.append(rel)
                 refs.append({"path": rel, "n": len(fresh)})
-            if len(refs) > max_segs:
+            if len(refs) > _MAX_SEGMENTS:
                 refs.sort(key=lambda r: r["n"])
-                k = len(refs) - max(1, max_segs // 2) + 1
+                k = len(refs) - max(1, _MAX_SEGMENTS // 2) + 1
                 merged_entries: list[dict] = []
                 for r in refs[:k]:
                     merged_entries.extend(
@@ -453,11 +456,7 @@ class LakeTable:
             m["file_segments"] = refs
             m["files"] = []
 
-        if (
-            forced == "true"
-            or "committed_segments" in m
-            or len(m.get("committed") or {}) > tail_cap
-        ):
+        if "committed_segments" in m or len(m.get("committed") or {}) > _COMMITTED_TAIL:
             committed = dict(m.get("committed") or {})
             crefs = list(m.get("committed_segments") or [])
             sealed: dict[str, dict] = {}
@@ -477,14 +476,14 @@ class LakeTable:
                 # sealed history is stale — rebuild from the full live set
                 crefs = []
                 tail = committed
-            if len(tail) > tail_cap:
+            if len(tail) > _COMMITTED_TAIL:
                 rel = self._write_segment({"committed": tail})
                 new_segs.append(rel)
                 crefs.append({"path": rel, "n": len(tail)})
                 tail = {}
-            if len(crefs) > max_segs:
+            if len(crefs) > _MAX_SEGMENTS:
                 crefs.sort(key=lambda r: r["n"])
-                k = len(crefs) - max(1, max_segs // 2) + 1
+                k = len(crefs) - max(1, _MAX_SEGMENTS // 2) + 1
                 cmerged: dict[str, dict] = {}
                 for r in crefs[:k]:
                     cmerged.update(
@@ -499,21 +498,29 @@ class LakeTable:
         return m, new_segs
 
     def _write_manifest(self, manifest: dict) -> int:
-        """O_EXCL create → atomic manifest publish. Returns the version on
-        success; raises CommitConflict if another writer already published
-        this version (the caller must re-read the winning manifest and
-        re-apply its delta — blindly bumping the version here would commit
-        stale content and silently drop the winner's files/committed
-        entries, a lost update). Segment files written for this attempt are
-        reclaimed when the publish loses the race — the winner's segments
-        are untouched (they were written under different uuid names)."""
+        """Atomic compare-and-swap publish of one manifest version. The JSON
+        is written and fsynced under a temp name that never lists as a
+        version, then hard-linked to its version name: the link is atomic
+        and fails if the name exists, so a version appears complete or not
+        at all — neither a concurrent reader nor a crash mid-write can see
+        a torn head. Returns the version; raises CommitConflict if another
+        writer already published it (the caller must re-read the winning
+        manifest and re-apply its delta — blindly bumping the version here
+        would commit stale content and silently drop the winner's
+        files/committed entries, a lost update; _publish does this).
+        Segment files written for a failed attempt are reclaimed — the
+        winner's segments are untouched (different uuid names)."""
         storage, new_segs = self._dehydrate(manifest)
         v = storage["version"]
+        meta = self._meta_dir()
+        tmp = os.path.join(meta, f".publish-{uuid.uuid4().hex}.tmp")
         try:
-            with open(self._manifest_path(v), "x") as fh:
+            with open(tmp, "w") as fh:
                 json.dump(storage, fh)
-            return v
-        except FileExistsError:
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.link(tmp, self._manifest_path(v))
+        except BaseException as exc:
             for rel in new_segs:
                 ap = os.path.join(self.path, rel)
                 _SEG_CACHE.pop(ap, None)
@@ -521,7 +528,39 @@ class LakeTable:
                     os.remove(ap)
                 except OSError:
                     pass
-            raise CommitConflict(f"version {v} already committed by another writer")
+            if isinstance(exc, FileExistsError):
+                raise CommitConflict(f"version {v} already committed by another writer")
+            raise
+        finally:
+            try:
+                os.remove(tmp)
+            except FileNotFoundError:
+                pass
+        _fsync_dir(meta)
+        return v
+
+    def _publish(self, operation: str, apply) -> int:
+        """The one commit path: every metadata change to this table lands
+        here (a sync's commit point is the publish of one version). Each
+        attempt re-reads the head and calls `apply(m)`, which edits it in
+        place. `apply` may instead return a version to stop without
+        publishing (an idempotent no-op), or raise CommitConflict when the
+        data it was derived from changed underneath it. The edited head is
+        stamped (parent, version, operation) and published; losing the
+        publish race re-runs `apply` on the winner's manifest, so only this
+        commit's delta is re-applied, never a stale full manifest."""
+        while True:
+            m = self.manifest()
+            done = apply(m)
+            if done is not None:
+                return done
+            m["parent"] = m["version"]
+            m["version"] += 1
+            m["operation"] = operation
+            try:
+                return self._write_manifest(m)
+            except CommitConflict:
+                continue  # lost the race on metadata only — re-read + re-apply
 
     # ---- schema ----
 
@@ -535,70 +574,59 @@ class LakeTable:
     def evolve_schema(self, new_schema: StructType) -> StructType:
         """Merge-evolve the table schema (add columns / widen types); no-op
         if nothing changes. ≡ Iceberg UpdateSchema / the reference's
-        catalog-diff incremental run (SURVEY §1.4)."""
-        while True:
-            m = self.manifest()
-            current = StructType.fromJson(m["schemas"][str(m["schema_id"])])
+        catalog-diff incremental run (SURVEY §1.4). Existing names keep
+        their field id (type widening is an in-place change); genuinely
+        new names get fresh ids."""
+
+        def build(current: StructType, ids: dict) -> "tuple[StructType, dict] | None":
             merged = evolve(current, new_schema)
             if merged == current:
-                return current
-            new_id = int(m["schema_id"]) + 1
-            m["schemas"][str(new_id)] = json.loads(merged.json())
-            # existing names keep their field id (type widening is an
-            # in-place change); genuinely new names get fresh ids. A legacy
-            # manifest (no field_ids) bootstraps identity ids for its
-            # current sid FIRST — and stores them, so files already written
-            # under that sid stay id-mapped through later renames.
-            cur_ids = dict((m.get("field_ids") or {}).get(str(m["schema_id"])) or {})
-            if not cur_ids:
-                cur_ids = {f.name: i + 1 for i, f in enumerate(current.fields)}
-                m.setdefault("field_ids", {})[str(m["schema_id"])] = cur_ids
+                return None
+            return merged, {f.name: ids[f.name] for f in merged.fields if f.name in ids}
+
+        return self._commit_schema_change(build, "evolve-schema")
+
+    def _commit_schema_change(
+        self, build, operation: str, defaults: dict | None = None
+    ) -> StructType:
+        """Metadata-only schema commit. `build(current_schema, current_ids)`
+        returns (new_schema, new_ids), None when nothing changes, or raises.
+        Columns of new_schema missing from new_ids get fresh field ids;
+        `defaults` (column name → initial default) are keyed on the ids."""
+        new_schema = None
+
+        def apply(m: dict) -> int | None:
+            nonlocal new_schema
+            sid = str(m["schema_id"])
+            current = StructType.fromJson(m["schemas"][sid])
+            field_ids = m.setdefault("field_ids", {})
+            if not field_ids.get(sid):
+                # legacy manifest: bootstrap identity ids for the current sid
+                # and STORE them, so files already written under that sid
+                # stay id-mapped through this change and later renames
+                field_ids[sid] = {f.name: i + 1 for i, f in enumerate(current.fields)}
+            cur_ids = dict(field_ids[sid])
+            built = build(current, cur_ids)
+            if built is None:
+                new_schema = current
+                return m["version"]
+            new_schema, new_ids = built
             last = int(m.get("last_field_id") or max(cur_ids.values(), default=0))
-            new_ids = {}
-            for f in merged.fields:
-                if f.name in cur_ids:
-                    new_ids[f.name] = cur_ids[f.name]
-                else:
+            for f in new_schema.fields:
+                if f.name not in new_ids:
                     last += 1
                     new_ids[f.name] = last
-            m.setdefault("field_ids", {})[str(new_id)] = new_ids
-            m["last_field_id"] = last
-            m["schema_id"] = new_id
-            m["version"] += 1
-            m["parent"] = m["version"] - 1
-            m["operation"] = "evolve-schema"
-            try:
-                self._write_manifest(m)
-                return merged
-            except CommitConflict:
-                continue  # re-read the winner and re-apply the schema merge
-
-    def _commit_schema_change(self, build, operation: str) -> StructType:
-        """CAS loop for metadata-only schema commits: `build(current_schema,
-        current_ids)` returns (new_schema, new_ids) or raises."""
-        while True:
-            m = self.manifest()
-            current = StructType.fromJson(m["schemas"][str(m["schema_id"])])
-            cur_ids = dict(
-                (m.get("field_ids") or {}).get(str(m["schema_id"]))
-                or {f.name: i + 1 for i, f in enumerate(current.fields)}
-            )
-            new_schema, new_ids = build(current, cur_ids)
-            new_sid = int(m["schema_id"]) + 1
+            for name, value in (defaults or {}).items():
+                m.setdefault("field_defaults", {})[str(new_ids[name])] = value
+            new_sid = int(sid) + 1
             m["schemas"][str(new_sid)] = json.loads(new_schema.json())
-            m.setdefault("field_ids", {})[str(new_sid)] = new_ids
-            m.setdefault(
-                "last_field_id", max(new_ids.values()) if new_ids else 0
-            )
+            field_ids[str(new_sid)] = new_ids
+            m["last_field_id"] = last
             m["schema_id"] = new_sid
-            m["version"] += 1
-            m["parent"] = m["version"] - 1
-            m["operation"] = operation
-            try:
-                self._write_manifest(m)
-                return new_schema
-            except CommitConflict:
-                continue
+            return None
+
+        self._publish(operation, apply)
+        return new_schema
 
     def add_column(
         self, name: str, dtype, default=None
@@ -624,32 +652,17 @@ class LakeTable:
             dtype = _parse_datatype_string(str(dtype))
         if default is not None and not isinstance(default, (str, int, float, bool)):
             raise ValueError("default must be a JSON-storable scalar")
-        while True:
-            m = self.manifest()
-            current = StructType.fromJson(m["schemas"][str(m["schema_id"])])
+
+        def build(current: StructType, ids: dict) -> tuple[StructType, dict]:
             if name in current.fieldNames():
                 raise ValueError(f"column {name!r} already exists")
-            cur_ids = dict(
-                (m.get("field_ids") or {}).get(str(m["schema_id"]))
-                or {f.name: i + 1 for i, f in enumerate(current.fields)}
-            )
-            fid = int(m.get("last_field_id") or max(cur_ids.values(), default=0)) + 1
-            new_schema = StructType([*current.fields, StructField(name, dtype, True)])
-            new_sid = int(m["schema_id"]) + 1
-            m["schemas"][str(new_sid)] = json.loads(new_schema.json())
-            m.setdefault("field_ids", {})[str(new_sid)] = {**cur_ids, name: fid}
-            m["last_field_id"] = fid
-            if default is not None:
-                m.setdefault("field_defaults", {})[str(fid)] = default
-            m["schema_id"] = new_sid
-            m["version"] += 1
-            m["parent"] = m["version"] - 1
-            m["operation"] = f"add-column:{name}"
-            try:
-                self._write_manifest(m)
-                return new_schema
-            except CommitConflict:
-                continue
+            return StructType([*current.fields, StructField(name, dtype, True)]), ids
+
+        return self._commit_schema_change(
+            build,
+            f"add-column:{name}",
+            {name: default} if default is not None else None,
+        )
 
     def rename_column(self, old: str, new: str) -> StructType:
         """Metadata-only column rename (≡ Iceberg ALTER TABLE ... RENAME
@@ -846,21 +859,16 @@ class LakeTable:
     def _update_properties(
         self, sets: dict[str, str], removes: set[str], operation: str
     ) -> int:
-        """CAS loop for metadata-only property commits."""
-        while True:
-            m = self.manifest()
+        """Metadata-only property commit."""
+
+        def apply(m: dict) -> None:
             props = dict(m.get("properties") or {})
             props.update(sets)
             for k in removes:
                 props.pop(k, None)
             m["properties"] = props
-            m["operation"] = operation
-            m["parent"] = m["version"]
-            m["version"] += 1
-            try:
-                return self._write_manifest(m)
-            except CommitConflict:
-                continue
+
+        return self._publish(operation, apply)
 
     # ---- reads ----
 
@@ -1481,8 +1489,7 @@ class LakeTable:
             "files_removed": len(removed_paths),
             **(summary or {}),
         }
-        while True:
-            m = self.manifest()
+        def apply(m: dict) -> int | None:
             if keys and all(k in m["committed"] for k in keys):
                 for e in added:
                     p = os.path.join(self.path, e.path)
@@ -1494,9 +1501,9 @@ class LakeTable:
                     if os.path.exists(p):
                         os.remove(p)
                 return m["version"]
-            # CHECK constraints gate every data-adding commit — checked
-            # INSIDE the CAS loop (a constraint added concurrently is seen
-            # on retry) and AFTER the idempotency guard (a redelivered
+            # CHECK constraints gate every data-adding commit — checked on
+            # EVERY attempt (a constraint added concurrently is seen on
+            # retry) and AFTER the idempotency guard (a redelivered
             # committed key stays a silent no-op even if a constraint was
             # added since). Scans staged files only; GCs them on violation.
             self._check_constraints(added, m)
@@ -1562,7 +1569,6 @@ class LakeTable:
                 for d in m.get("eq_delete_files", [])
                 if any((f.get("seq") or 0) < d["seq"] for f in m["files"])
             ] + [{**d, "seq": new_version} for d in eq_deletes_added or []]
-            m["operation"] = operation
             m["commit"] = {"key": keys[0] if keys else None, **full_summary}
             for i, k in enumerate(keys):
                 m["committed"][k] = (
@@ -1570,12 +1576,9 @@ class LakeTable:
                     if i == 0
                     else {"version": new_version, "group_lead": keys[0]}
                 )
-            m["parent"] = m["version"]
-            m["version"] = new_version
-            try:
-                return self._write_manifest(m)
-            except CommitConflict:
-                continue  # lost the race on metadata only — re-read + re-apply
+            return None
+
+        return self._publish(operation, apply)
 
     def append(
         self,
@@ -1628,43 +1631,40 @@ class LakeTable:
                     f"cannot roll back to v{version}: delete sidecar "
                     f"{d['path']} was vacuumed"
                 )
-        while True:
-            m = self.manifest()
+        def apply(m: dict) -> int | None:
             if m["version"] == version:
                 return version
-            new = {
-                **m,
-                # segment refs follow the restored state: hydrated values in
-                # target["files"]/["committed"] alias the target's segments,
-                # so carrying ITS refs makes the restore a metadata-only
-                # no-rewrite commit (head refs would force a full re-split)
-                **{
-                    k: target[k]
-                    for k in ("file_segments", "committed_segments")
-                    if k in target
-                },
-                # sidecars restore WITH the data: keeping the head's (or
-                # dropping the target's) delete_files would make the
-                # restored state differ from what version actually read
-                "delete_files": target.get("delete_files", []),
-                "eq_delete_files": target.get("eq_delete_files", []),
-                "files": target["files"],
-                "schema_id": target["schema_id"],
-                "schemas": target["schemas"],
-                "field_ids": target.get("field_ids", m.get("field_ids", {})),
-                "field_defaults": target.get("field_defaults", {}),
-                "partition_spec": target["partition_spec"],
-                "committed": target["committed"],
-                "properties": target.get("properties", {}),
-                "operation": "rollback",
-                "commit": {"key": None, "rollback_to": version},
-                "parent": m["version"],
-                "version": m["version"] + 1,
-            }
-            try:
-                return self._write_manifest(new)
-            except CommitConflict:
-                continue  # lost the metadata race — re-read and retry
+            m.update(
+                {
+                    # segment refs follow the restored state: hydrated
+                    # values in target["files"]/["committed"] alias the
+                    # target's segments, so carrying ITS refs makes the
+                    # restore a metadata-only no-rewrite commit (head refs
+                    # would force a full re-split)
+                    **{
+                        k: target[k]
+                        for k in ("file_segments", "committed_segments")
+                        if k in target
+                    },
+                    # sidecars restore WITH the data: keeping the head's (or
+                    # dropping the target's) delete_files would make the
+                    # restored state differ from what version actually read
+                    "delete_files": target.get("delete_files", []),
+                    "eq_delete_files": target.get("eq_delete_files", []),
+                    "files": target["files"],
+                    "schema_id": target["schema_id"],
+                    "schemas": target["schemas"],
+                    "field_ids": target.get("field_ids", m.get("field_ids", {})),
+                    "field_defaults": target.get("field_defaults", {}),
+                    "partition_spec": target["partition_spec"],
+                    "committed": target["committed"],
+                    "properties": target.get("properties", {}),
+                    "commit": {"key": None, "rollback_to": version},
+                }
+            )
+            return None
+
+        return self._publish("rollback", apply)
 
     def compact(
         self,
@@ -1758,8 +1758,6 @@ class LakeTable:
         old_entries = [FileEntry.from_json(d) for d in m0["files"]]
         if not old_entries:
             return m0["version"]
-        dv0, eq0 = m0.get("delete_files", []), m0.get("eq_delete_files", [])
-        old_paths = {e.path for e in old_entries}
         stat_cols = sorted({c for e in old_entries for c in e.stats} | set(sort_cols))
         spec = self.partition_spec()
         n_out = max(
@@ -1787,49 +1785,16 @@ class LakeTable:
         staged = self._stage_write(
             arranged, stat_cols, one_file_per_partition=False
         )
-        added_json = [e.to_json() for e in staged]
-        while True:
-            m = self.manifest()
-            live = {f["path"] for f in m["files"]}
-            if live != old_paths:
-                raise CommitConflict(
-                    "live file set changed during cluster rewrite — re-run "
-                    "to include the concurrently committed files"
-                )
-            if m.get("delete_files", []) != dv0 or m.get("eq_delete_files", []) != eq0:
-                # a delete committed since this rewrite's read would be
-                # silently materialized-away by the seq stamp below
-                raise CommitConflict(
-                    "row-level deletes committed during cluster rewrite — "
-                    "re-run against current state"
-                )
-            for d in added_json:
-                d["seq"] = m["version"] + 1
-            m["files"] = added_json
-            # a full rewrite materializes every outstanding delete: position
-            # sidecars lose all targets, equality deletes no longer predate
-            # any live file — both drop (files become vacuum candidates)
-            m["delete_files"] = []
-            m["eq_delete_files"] = []
-            m["operation"] = "cluster"
-            m.setdefault("properties", {})["sort.order"] = (
-                f"zorder({','.join(sort_cols)})"
-                if zorder and len(sort_cols) >= 2
-                else ",".join(sort_cols)
-            )
-            m["commit"] = {
-                "key": None,
-                "rows_written": sum(e.rows for e in staged),
-                "bytes_written": sum(e.bytes for e in staged),
-                "files_added": len(staged),
-                "files_removed": len(old_paths),
-            }
-            m["parent"] = m["version"]
-            m["version"] = m["version"] + 1
-            try:
-                return self._write_manifest(m)
-            except CommitConflict:
-                continue  # metadata race only; re-check the live set
+        order = (
+            f"zorder({','.join(sort_cols)})"
+            if zorder and len(sort_cols) >= 2
+            else ",".join(sort_cols)
+        )
+
+        def edit(m: dict) -> None:
+            m.setdefault("properties", {})["sort.order"] = order
+
+        return self._commit_rewrite(m0, staged, "cluster", edit)
 
     def rewrite_partition_spec(
         self, new_spec: PartitionSpec, stat_cols: list[str] | None = None
@@ -1845,57 +1810,68 @@ class LakeTable:
         Invariant protected here: every LIVE file's partition values were
         produced by the CURRENT spec (merge's driver-side bucket pruning
         depends on it). A file appended concurrently under the old spec
-        would break that, so the commit loop raises CommitConflict if the
+        would break that, so the commit raises CommitConflict if the
         live set no longer matches what this rewrite read — re-run to
         include the newcomer.
         """
         m0 = self.manifest()
-        old_entries = [FileEntry.from_json(d) for d in m0["files"]]
-        dv0, eq0 = m0.get("delete_files", []), m0.get("eq_delete_files", [])
-        old_paths = {e.path for e in old_entries}
         stat_cols = (
             stat_cols
             if stat_cols is not None
-            else sorted({c for e in old_entries for c in e.stats})
+            else sorted({c for d in m0["files"] for c in d.get("stats") or {}})
         )
         staged = self._stage_write(
             self.read(), stat_cols, one_file_per_partition=True, spec=new_spec
         )
+
+        def edit(m: dict) -> None:
+            m["partition_spec"] = new_spec.to_json()
+
+        return self._commit_rewrite(m0, staged, "rewrite-spec", edit)
+
+    def _commit_rewrite(
+        self, m0: dict, staged: "list[FileEntry]", operation: str, edit
+    ) -> int:
+        """Publish a full-table rewrite of the snapshot `m0`: `staged`
+        replaces every live file, and `edit(m)` adds the caller's own
+        metadata change. Raises CommitConflict if files or row-level
+        deletes were committed since `m0` was read — the rewrite would
+        drop the new files, or materialize-away the new deletes through
+        the seq stamp below; re-run it against current state."""
+        old_paths = {f["path"] for f in m0["files"]}
+        dv0, eq0 = m0.get("delete_files", []), m0.get("eq_delete_files", [])
         added_json = [e.to_json() for e in staged]
-        while True:
-            m = self.manifest()
-            live = {f["path"] for f in m["files"]}
-            if live != old_paths:
+        summary = {
+            "key": None,
+            "rows_written": sum(e.rows for e in staged),
+            "bytes_written": sum(e.bytes for e in staged),
+            "files_added": len(staged),
+            "files_removed": len(old_paths),
+        }
+
+        def apply(m: dict) -> None:
+            if {f["path"] for f in m["files"]} != old_paths:
                 raise CommitConflict(
-                    "live file set changed during spec rewrite — re-run to "
-                    "re-cluster the concurrently committed files"
+                    f"live file set changed during {operation} — re-run to "
+                    "include the concurrently committed files"
                 )
             if m.get("delete_files", []) != dv0 or m.get("eq_delete_files", []) != eq0:
                 raise CommitConflict(
-                    "row-level deletes committed during spec rewrite — "
+                    f"row-level deletes committed during {operation} — "
                     "re-run against current state"
                 )
             for d in added_json:
                 d["seq"] = m["version"] + 1
             m["files"] = added_json
-            # full rewrite → all outstanding deletes are materialized
+            # a full rewrite materializes every outstanding delete: position
+            # sidecars lose all targets, equality deletes no longer predate
+            # any live file — both drop (files become vacuum candidates)
             m["delete_files"] = []
             m["eq_delete_files"] = []
-            m["partition_spec"] = new_spec.to_json()
-            m["operation"] = "rewrite-spec"
-            m["commit"] = {
-                "key": None,
-                "rows_written": sum(e.rows for e in staged),
-                "bytes_written": sum(e.bytes for e in staged),
-                "files_added": len(staged),
-                "files_removed": len(old_paths),
-            }
-            m["parent"] = m["version"]
-            m["version"] = m["version"] + 1
-            try:
-                return self._write_manifest(m)
-            except CommitConflict:
-                continue  # metadata race only; re-check the live set
+            m["commit"] = summary
+            edit(m)
+
+        return self._publish(operation, apply)
 
     def vacuum(self, retain_last: int = 1, grace_s: float = 0.0) -> int:
         """Delete data files not referenced by the newest `retain_last`
@@ -1909,7 +1885,7 @@ class LakeTable:
 
         `grace_s`: skip unreferenced files younger than this many seconds
         (≡ Iceberg remove_orphan_files' older_than). A writer stages data
-        files and manifest segments BEFORE its O_EXCL head publish, so a
+        files and manifest segments BEFORE its head publish, so a
         vacuum racing an in-flight commit would see them as orphans and
         corrupt the winning snapshot; any scheduled vacuum that can
         overlap a writer must set grace_s above the longest commit
@@ -1929,27 +1905,16 @@ class LakeTable:
                 return now - os.path.getmtime(ap) < grace_s
             except OSError:
                 return True  # vanished mid-scan → leave it alone
-        d = self._meta_dir()
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        versions = self._versions()
         keep = set(versions[-max(1, retain_last):])
         keep |= {v for v in self._refs()["tags"].values() if v in versions}
         live: set[str] = set()
         for v in sorted(keep):
-            m = self.manifest(v)
-            live |= {f["path"] for f in m["files"]}
-            live |= {x["path"] for x in m.get("delete_files", [])}
-            live |= {x["path"] for x in m.get("eq_delete_files", [])}
+            live |= _live_paths(self.manifest(v))
         # staged-but-unpublished branch work is live too: a vacuum on main
         # must never delete files an open branch head references
         for b in self.branches():
-            bt = self.branch(b)
-            live |= {f.path for f in bt.files()}
-            live |= {d["path"] for d in bt.delete_files()}
-            live |= {d["path"] for d in bt.eq_delete_files()}
+            live |= _live_paths(self.branch(b).manifest())
         removed = 0
         data_root = os.path.join(self.path, _DATA_DIR)
         for root, _dirs, names in os.walk(data_root):
@@ -2067,12 +2032,7 @@ class LakeTable:
         always retained. Expired versions are ledgered in _lake/refs.json
         as intervals so fsck can tell this legal gap from corruption.
         Returns manifests removed."""
-        d = self._meta_dir()
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        versions = self._versions()
         refs = self._refs()
         tagged = set(refs["tags"].values())
         victims = [v for v in versions[: -max(1, retain_last)] if v not in tagged]
@@ -2085,29 +2045,18 @@ class LakeTable:
             self._write_refs(refs)
         return len(victims)
 
-    def _all_manifest_paths(self) -> list[str]:
-        """Every retained manifest file — main chain + all branch chains."""
-        dirs = [os.path.join(self.path, _LAKE_DIR)]
-        for b in self.branches():
-            dirs.append(os.path.join(self.path, _LAKE_DIR, "branches", b))
-        out = []
-        for d in dirs:
-            if not os.path.isdir(d):
-                continue
-            out.extend(
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.startswith("v") and f.endswith(".json")
-            )
-        return out
+    def _chains(self) -> "list[LakeTable]":
+        """Handles on every manifest chain of the table: main + branches."""
+        main = LakeTable(self.spark, self.path)
+        return [main, *(main.branch(b) for b in main.branches())]
 
     def _referenced_segments(self) -> set[str]:
+        """Segments any retained manifest (main or branch chain) references."""
         refs: set[str] = set()
-        for mp in self._all_manifest_paths():
-            with open(mp) as fh:
-                raw = json.load(fh)
-            for sec in ("file_segments", "committed_segments"):
-                refs |= {r["path"] for r in raw.get(sec) or []}
+        for t in self._chains():
+            for v in t._versions():
+                with open(t._manifest_path(v)) as fh:
+                    refs |= {path for path, _sec in _segment_refs(json.load(fh))}
         return refs
 
     def fsck(self) -> list[dict]:
@@ -2126,22 +2075,61 @@ class LakeTable:
           broken-chain     a parent link points at a missing manifest version
           orphan-file      data file on disk no snapshot references (vacuum
                            candidate — informational, never corruption)
-          missing-segment  live manifest references a segment file that is
-                           gone (metadata corruption: part of the file list
-                           or committed set is unrecoverable)
+          missing-segment  a retained manifest references a segment file
+                           that is gone (metadata corruption: part of the
+                           file list or committed set is unrecoverable);
+                           `version` is set unless it is the head, `branch`
+                           when the manifest is on a branch chain
           orphan-segment   segment file no retained manifest references
                            (vacuum candidate — informational)
         """
         issues: list[dict] = []
-        with open(self._manifest_path(self.current_version())) as fh:
-            raw = json.load(fh)
-        for sec in ("file_segments", "committed_segments"):
-            for r in raw.get(sec) or []:
-                if not os.path.exists(os.path.join(self.path, r["path"])):
-                    issues.append(
-                        {"kind": "missing-segment", "path": r["path"], "section": sec}
-                    )
-        m = self._hydrate(raw, lenient=True)
+        expired = self._refs().get("expired", [])
+        referenced: set[str] = set()  # paths a retained snapshot keeps alive
+        live_segs: set[str] = set()
+        refs_incomplete = False
+        m: dict = {}
+        # one pass over every retained manifest. This handle's chain: each
+        # version's segments must exist (a vanished one is corruption for
+        # time travel, and leniently skipping it would drop its file paths
+        # from `referenced` — misclassifying live files as orphans), each
+        # parent must exist unless expire_snapshots() legally removed it
+        # (below the oldest retained version, or inside the refs.json
+        # expired ledger — tagged snapshots leave retained islands), and
+        # each version's live paths count as referenced. Branch chains add
+        # their segment refs and their HEAD's live paths.
+        for t in self._chains():
+            own = t._branch == self._branch
+            versions = t._versions()
+            retained = set(versions)
+            for v in versions:
+                with open(t._manifest_path(v)) as fh:
+                    raw = json.load(fh)
+                head = v == versions[-1]
+                for path, sec in _segment_refs(raw):
+                    live_segs.add(path)
+                    if not os.path.exists(os.path.join(self.path, path)):
+                        refs_incomplete = True
+                        issue = {"kind": "missing-segment", "path": path, "section": sec}
+                        if not (own and head):
+                            issue["version"] = v
+                        if not own:
+                            issue["branch"] = t._branch
+                        issues.append(issue)
+                parent = raw.get("parent")
+                if (
+                    own
+                    and parent
+                    and parent >= versions[0]
+                    and not self._in_intervals(parent, expired)
+                    and parent not in retained
+                ):
+                    issues.append({"kind": "broken-chain", "version": v, "parent": parent})
+                if own or head:
+                    mv = self._hydrate(raw, lenient=True)
+                    referenced |= _live_paths(mv)
+                    if own and head:
+                        m = mv
         entries = [FileEntry.from_json(d) for d in m["files"]]
         schemas = set(m["schemas"].keys())
         for e in entries:
@@ -2168,71 +2156,11 @@ class LakeTable:
                         )
                 except TypeError:
                     pass
-        # chain walk: every retained manifest's parent must exist — except
-        # where expire_snapshots() legally removed it: below the oldest
-        # retained version (prefix expiry) or inside the refs.json expired
-        # ledger (tagged snapshots leave retained islands mid-chain). A
-        # missing parent NOT covered by either is corruption.
-        retained = [
-            v
-            for v in range(1, (self.current_version() or 0) + 1)
-            if os.path.exists(self._manifest_path(v))
-        ]
-        floor = retained[0] if retained else 0
-        expired = self._refs().get("expired", [])
-        for v in retained:
-            with open(self._manifest_path(v)) as fh:
-                mv = json.load(fh)
-            parent = mv.get("parent")
-            if (
-                parent
-                and parent >= floor
-                and not self._in_intervals(parent, expired)
-                and not os.path.exists(self._manifest_path(parent))
-            ):
-                issues.append({"kind": "broken-chain", "version": v, "parent": parent})
         # live delete sidecars (positional + equality) must exist on disk —
         # a missing one silently resurrects deleted rows
         for d in m.get("delete_files", []) + m.get("eq_delete_files", []):
             if not os.path.exists(os.path.join(self.path, d["path"])):
                 issues.append({"kind": "missing-file", "path": d["path"]})
-        referenced = {e.path for e in entries}
-        referenced |= {d["path"] for d in self.delete_files()}
-        referenced |= {d["path"] for d in self.eq_delete_files()}
-        # Every RETAINED manifest (not just the head) gets the same
-        # segment-existence check: a vanished segment referenced by an
-        # older retained snapshot is metadata corruption for time travel,
-        # and leniently skipping it would also drop its file paths from
-        # the `referenced` set — misclassifying live files as orphans.
-        refs_incomplete = False
-        head_v = self.current_version()
-        for v in range(1, (head_v or 0) + 1):
-            mp = self._manifest_path(v)
-            if os.path.exists(mp):
-                with open(mp) as fh:
-                    raw_v = json.load(fh)
-                for sec in ("file_segments", "committed_segments"):
-                    for r in raw_v.get(sec) or []:
-                        if not os.path.exists(os.path.join(self.path, r["path"])):
-                            refs_incomplete = True
-                            if v != head_v:  # head already surveyed above
-                                issues.append(
-                                    {
-                                        "kind": "missing-segment",
-                                        "path": r["path"],
-                                        "section": sec,
-                                        "version": v,
-                                    }
-                                )
-                mv = self._hydrate(raw_v, lenient=True)
-                referenced |= {f["path"] for f in mv["files"]}
-                referenced |= {d["path"] for d in mv.get("delete_files", [])}
-                referenced |= {d["path"] for d in mv.get("eq_delete_files", [])}
-        for b in self.branches():
-            bt = self.branch(b)
-            referenced |= {e.path for e in bt.files()}
-            referenced |= {d["path"] for d in bt.delete_files()}
-            referenced |= {d["path"] for d in bt.eq_delete_files()}
         data_root = os.path.join(self.path, _DATA_DIR)
         # a vanished segment means `referenced` is incomplete — flagging
         # orphans off a partial set would mark live files as vacuum
@@ -2245,7 +2173,6 @@ class LakeTable:
                     rel = os.path.relpath(os.path.join(root, name), self.path)
                     if rel not in referenced:
                         issues.append({"kind": "orphan-file", "path": rel})
-        live_segs = self._referenced_segments()
         segs_root = os.path.join(self.path, _LAKE_DIR, _SEG_DIR)
         if os.path.isdir(segs_root):
             for name in sorted(os.listdir(segs_root)):
@@ -2256,6 +2183,24 @@ class LakeTable:
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)
+
+
+def _live_paths(m: dict) -> set[str]:
+    """Paths a hydrated manifest keeps alive: data files plus position and
+    equality delete sidecars."""
+    return {f["path"] for f in m["files"]} | {
+        d["path"] for d in m.get("delete_files", []) + m.get("eq_delete_files", [])
+    }
+
+
+def _segment_refs(raw: dict) -> list[tuple[str, str]]:
+    """(segment path, section) for every segment a storage-form manifest
+    references."""
+    return [
+        (r["path"], sec)
+        for sec in ("file_segments", "committed_segments")
+        for r in raw.get(sec) or []
+    ]
 
 
 def _align_by_id(

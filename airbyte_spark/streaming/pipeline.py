@@ -222,14 +222,8 @@ class CdcPipeline:
             # the chain is transient (dropped at publish), and vacuum from
             # a branch view would see main's files as orphans
             return
-        import os
-
-        d = self.table._meta_dir()
-        n = sum(
-            1 for f in os.listdir(d) if f.startswith("v") and f.endswith(".json")
-        )
         # 2x hysteresis: expire in batches instead of one manifest per commit
-        if n > 2 * self.auto_expire_keep:
+        if len(self.table._versions()) > 2 * self.auto_expire_keep:
             self.table.expire_snapshots(retain_last=self.auto_expire_keep)
             self.table.vacuum(retain_last=self.auto_expire_keep)
 

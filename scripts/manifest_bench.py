@@ -28,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from airbyte_spark.lake import format as fmt
 from airbyte_spark.lake.format import FileEntry, LakeTable, PartitionSpec
 
 
@@ -51,18 +52,27 @@ def _entry(i: int) -> FileEntry:
 
 def run(spark, n_files: int, n_commits: int, segmented: bool) -> tuple[float, int]:
     base = tempfile.mkdtemp(prefix="manifest_bench_")
-    props = {"manifest.segmented": "true"} if segmented else {"manifest.segmented": "false"}
     schema = StructType(
         [StructField("url", StringType()), StructField("n", LongType())]
     )
-    t = LakeTable.create(
-        spark, f"{base}/t", schema, PartitionSpec(), properties=props
-    )
-    t.commit([_entry(i) for i in range(n_files)], operation="seed", checkpoint_key="seed")
-    t0 = time.time()
-    for c in range(n_commits):
-        t.commit([_entry(n_files + c)], operation="append", checkpoint_key=f"ck-{c}")
-    per_commit_ms = (time.time() - t0) / n_commits * 1000
+    # the storage form follows size alone: the segmented arm segments from
+    # the first file, the inline arm gets thresholds no table can reach
+    saved = fmt._AUTO_SEGMENT_FILES, fmt._COMMITTED_TAIL
+    if segmented:
+        fmt._AUTO_SEGMENT_FILES = 0
+    else:
+        fmt._AUTO_SEGMENT_FILES = fmt._COMMITTED_TAIL = sys.maxsize
+    try:
+        t = LakeTable.create(spark, f"{base}/t", schema, PartitionSpec())
+        t.commit(
+            [_entry(i) for i in range(n_files)], operation="seed", checkpoint_key="seed"
+        )
+        t0 = time.time()
+        for c in range(n_commits):
+            t.commit([_entry(n_files + c)], operation="append", checkpoint_key=f"ck-{c}")
+        per_commit_ms = (time.time() - t0) / n_commits * 1000
+    finally:
+        fmt._AUTO_SEGMENT_FILES, fmt._COMMITTED_TAIL = saved
     head_bytes = os.path.getsize(
         os.path.join(t.path, "_lake", f"v{t.current_version():09d}.json")
     )

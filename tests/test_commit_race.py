@@ -30,14 +30,69 @@ def _stage(t, spark, rows):
     )
 
 
-def test_lost_update_interleaving(spark, tmp_path, monkeypatch):
+def _rows(t):
+    return {r["k"]: r for r in t.read().collect()}
+
+
+# operation under test -> (run it on the loser's handle, check its effect on
+# the final table). Each runs against a table holding ("z", 0) under key
+# "base"; the loser's first publish attempt loses to the racer's commit.
+CASES = {
+    "commit": (
+        lambda t, spark: t.commit(
+            _stage(t, spark, [("a", 1)]), operation="append", checkpoint_key="w1"
+        ),
+        lambda t: "w1" in t.committed() and _rows(t)["a"]["v"] == 1,
+    ),
+    "rollback": (
+        lambda t, spark: t.rollback(1),
+        lambda t: t.files() == [] and t.committed() == {},
+    ),
+    "add_constraint": (
+        lambda t, spark: t.add_constraint("pos", "v >= 0"),
+        lambda t: t.constraints() == {"pos": "v >= 0"},
+    ),
+    "evolve_schema": (
+        lambda t, spark: t.evolve_schema(
+            StructType([*SCHEMA.fields, StructField("extra", LongType(), True)])
+        ),
+        lambda t: t.schema().fieldNames() == ["k", "v", "extra"],
+    ),
+    "add_column": (
+        lambda t, spark: t.add_column("extra", "bigint", default=7),
+        lambda t: {r["extra"] for r in _rows(t).values()} == {7},
+    ),
+    "rename_column": (
+        lambda t, spark: t.rename_column("v", "score"),
+        lambda t: {k: r["score"] for k, r in _rows(t).items()} == {"z": 0, "b": 2},
+    ),
+    "drop_column": (
+        lambda t, spark: t.drop_column("v"),
+        lambda t: t.schema().fieldNames() == ["k"],
+    ),
+    "cluster": (
+        lambda t, spark: t.cluster(["k"]),
+        lambda t: t.properties().get("sort.order") == "k",
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(CASES))
+def test_lost_update_interleaving(spark, tmp_path, monkeypatch, op):
     """writer1 and writer2 both read version v; writer2 publishes v+1 while
-    writer1 is mid-commit; writer1's retry must preserve writer2's files
-    AND committed key (red on the old stale-rewrite retry path)."""
+    writer1 is mid-commit; writer1's retry must re-read and re-apply only
+    its own change, preserving writer2's files AND committed key (red on
+    the old stale-rewrite retry path). Every caller of the one publish
+    loop is covered; cluster races a metadata-only commit, since a data
+    commit would (rightly) make its full rewrite conflict. A rollback
+    reverts the racer's changes by design, so for it the racer's commit
+    must survive as the restored head's parent, readable by time travel."""
+    run, effect = CASES[op]
     t1 = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, PartitionSpec())
+    t1.commit(_stage(t1, spark, [("z", 0)]), operation="append", checkpoint_key="base")
     t2 = LakeTable(spark, str(tmp_path / "t"))
-    e1 = _stage(t1, spark, [("a", 1)])
-    e2 = _stage(t2, spark, [("b", 2)])
+    e2 = [] if op == "cluster" else _stage(t2, spark, [("b", 2)])
+    v0 = t1.current_version()
 
     orig = LakeTable._write_manifest
     state = {"injected": False}
@@ -51,15 +106,19 @@ def test_lost_update_interleaving(spark, tmp_path, monkeypatch):
         return orig(self, manifest)
 
     monkeypatch.setattr(LakeTable, "_write_manifest", racy)
-    t1.commit(e1, operation="append", checkpoint_key="w1")
+    run(t1, spark)
     monkeypatch.setattr(LakeTable, "_write_manifest", orig)
 
+    assert state["injected"]
     m = t1.manifest()
-    paths = {f["path"] for f in m["files"]}
-    assert {e.path for e in e1} <= paths, "loser's own files missing"
-    assert {e.path for e in e2} <= paths, "winner's files dropped (lost update)"
-    assert {"w1", "w2"} <= set(m["committed"]), "winner's committed key dropped"
-    assert m["version"] == 3  # create=1, w2=2, w1 retried onto 3
+    assert m["version"] == v0 + 2  # racer took v0+1, the loser retried onto v0+2
+    assert m["parent"] == v0 + 1
+    assert effect(t1), "loser's own change missing"
+    racer_m = t1.manifest(v0 + 1) if op == "rollback" else m
+    assert "w2" in racer_m["committed"], "winner's committed key dropped"
+    assert {e.path for e in e2} <= {f["path"] for f in racer_m["files"]}, (
+        "winner's files dropped (lost update)"
+    )
 
 
 def test_conflicting_file_removal_raises(spark, tmp_path):

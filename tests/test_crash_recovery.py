@@ -95,3 +95,40 @@ def test_concurrent_commit_conflict_resolves(spark, sf_dir, tmp_path):
     paths = {f.path for f in t.files()}
     assert {e.path for e in e1} <= paths and {e.path for e in e2} <= paths
     assert set(t.committed()) >= {"cc-1", "cc-2"}
+
+
+def test_torn_manifest_publish_leaves_previous_version(spark, tmp_path, monkeypatch):
+    """A crash partway through writing a manifest (json.dump dies after
+    half the document) must leave the table at its previous version: the
+    torn version never lists, so the committed set, reads and fsck keep
+    working, and no temp file is left behind."""
+    import json
+
+    from airbyte_spark.lake.format import LakeTable, PartitionSpec
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, v string")
+    t = LakeTable.create(spark, str(tmp_path / "t"), df.schema, PartitionSpec())
+    t.append(df, checkpoint_key="c1")
+    v = t.current_version()
+    staged = t._stage_write(
+        spark.createDataFrame([(3, "c")], df.schema), [], one_file_per_partition=False
+    )
+
+    def torn_dump(obj, fh, *args, **kwargs):
+        text = json.dumps(obj)
+        fh.write(text[: len(text) // 2])
+        fh.flush()
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        t.commit(staged, checkpoint_key="c2")
+    monkeypatch.undo()
+
+    assert t.current_version() == v
+    assert not os.path.exists(t._manifest_path(v + 1))
+    assert not [f for f in os.listdir(t._meta_dir()) if not f.startswith("v")]
+    assert set(t.committed()) == {"c1"}
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 2]
+    # the staged file of the failed commit is the only debris
+    assert [i["kind"] for i in t.fsck()] == ["orphan-file"]

@@ -15,6 +15,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from airbyte_spark.lake import format as fmt
 from airbyte_spark.lake.format import LakeTable, PartitionSpec
 
 
@@ -86,17 +87,12 @@ def test_middle_gap_still_flagged_as_broken_chain(spark, sf_dir, tmp_path):
     assert kinds and kinds[0]["version"] == head
 
 
-def test_expiry_plus_vacuum_reclaims_stale_segments(spark, sf_dir, tmp_path):
+def test_expiry_plus_vacuum_reclaims_stale_segments(spark, sf_dir, tmp_path, monkeypatch):
     """Segments only expired manifests referenced become vacuum candidates;
     segments any retained manifest still references survive."""
     src = _src(spark, sf_dir)
-    t = LakeTable.create(
-        spark,
-        str(tmp_path / "t4"),
-        src.schema,
-        PartitionSpec(),
-        properties={"manifest.segmented": "true"},
-    )
+    monkeypatch.setattr(fmt, "_AUTO_SEGMENT_FILES", 0)  # segment from file one
+    t = LakeTable.create(spark, str(tmp_path / "t4"), src.schema, PartitionSpec())
     for i in range(4):
         t.append(src.filter(F.col("event_id") % 4 == i), stat_cols=["event_id"])
     t.compact(target_file_bytes=1 << 30)  # head now references ONE new segment
@@ -144,17 +140,16 @@ def test_properties_cli_roundtrip(spark, sf_dir, tmp_path):
     src = _src(spark, sf_dir)
     t = LakeTable.create(spark, str(tmp_path / "t6"), src.schema, PartitionSpec())
     args = cli._parser().parse_args(
-        ["properties", "--target", t.path, "--set", "manifest.segmented=true"]
+        ["properties", "--target", t.path, "--set", "bloom.key=event_id"]
     )
     out = cli.run(spark, args)
-    assert out["properties"]["manifest.segmented"] == "true"
+    assert out["properties"]["bloom.key"] == "event_id"
     t.append(src.limit(20))
-    with open(os.path.join(t.path, "_lake", f"v{t.current_version():09d}.json")) as fh:
-        assert json.load(fh).get("file_segments")  # property took effect
+    assert all("bloom" in e.stats["event_id"] for e in t.files())  # property took effect
     args = cli._parser().parse_args(
-        ["properties", "--target", t.path, "--unset", "manifest.segmented"]
+        ["properties", "--target", t.path, "--unset", "bloom.key"]
     )
-    assert "manifest.segmented" not in cli.run(spark, args)["properties"]
+    assert "bloom.key" not in cli.run(spark, args)["properties"]
 
 
 def test_pipeline_auto_expire_bounds_metadata(spark, sf_dir, tmp_path):
@@ -186,18 +181,13 @@ def test_pipeline_auto_expire_bounds_metadata(spark, sf_dir, tmp_path):
     assert pipe2.table.current_version() == v
 
 
-def test_vacuum_grace_period_protects_young_files(spark, sf_dir, tmp_path):
+def test_vacuum_grace_period_protects_young_files(spark, sf_dir, tmp_path, monkeypatch):
     """grace_s shields just-written (possibly mid-commit) files from the
     orphan sweep — the window between a writer staging files/segments and
-    its O_EXCL head publish."""
+    its head publish."""
     src = _src(spark, sf_dir)
-    t = LakeTable.create(
-        spark,
-        str(tmp_path / "t7"),
-        src.schema,
-        PartitionSpec(),
-        properties={"manifest.segmented": "true"},
-    )
+    monkeypatch.setattr(fmt, "_AUTO_SEGMENT_FILES", 0)  # segment from file one
+    t = LakeTable.create(spark, str(tmp_path / "t7"), src.schema, PartitionSpec())
     t.append(src)
     # plant fresh debris shaped like an in-flight commit: an unreferenced
     # data file and an unreferenced segment

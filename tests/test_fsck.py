@@ -77,12 +77,17 @@ def test_bad_stats_and_missing_bloom_detected(spark, tmp_path):
     assert "bad-stats" in kinds
 
 
-def test_missing_segment_in_retained_nonhead_manifest_detected(spark, tmp_path):
+def test_missing_segment_in_retained_nonhead_manifest_detected(
+    spark, tmp_path, monkeypatch
+):
     """A vanished segment referenced only by an OLDER retained manifest is
     metadata corruption for time travel — fsck must surface it (not skip
     leniently), and must suppress the orphan-file survey while the
     referenced set is incomplete (live files would read as orphans)."""
-    t = _t(spark, tmp_path, props={"manifest.segmented": "true"})
+    from airbyte_spark.lake import format as fmt
+
+    monkeypatch.setattr(fmt, "_AUTO_SEGMENT_FILES", 0)  # segment from file one
+    t = _t(spark, tmp_path)
     for i in range(3):
         t.append(
             spark.createDataFrame([(10 + i, "x")], "id bigint, v string"),

@@ -19,9 +19,17 @@ import os
 
 import pyspark.sql.functions as F
 
+from airbyte_spark.lake import format as fmt
 from airbyte_spark.lake.format import LakeTable, PartitionSpec
 
-SEGPROPS = {"manifest.segmented": "true", "manifest.committed_tail": "4"}
+# the storage form follows size alone; these module thresholds make a small
+# test table segment from its first file and seal committed keys past 4
+SEGMENTED = {"_AUTO_SEGMENT_FILES": 0, "_COMMITTED_TAIL": 4}
+
+
+def _segmented(monkeypatch, **extra):
+    for name, value in {**SEGMENTED, **extra}.items():
+        monkeypatch.setattr(fmt, name, value)
 
 
 def _events(spark, sf_dir, n=200):
@@ -32,13 +40,10 @@ def _events(spark, sf_dir, n=200):
     )
 
 
-def _mk(spark, tmp_path, name="t", props=None, spec=None):
+def _mk(spark, tmp_path, monkeypatch, name="t", spec=None, **consts):
+    _segmented(monkeypatch, **consts)
     return LakeTable.create(
-        spark,
-        str(tmp_path / name),
-        _SCHEMA_CACHE[0],
-        spec or PartitionSpec(),
-        properties=dict(SEGPROPS, **(props or {})),
+        spark, str(tmp_path / name), _SCHEMA_CACHE[0], spec or PartitionSpec()
     )
 
 
@@ -60,10 +65,10 @@ def setup_module():
     pass
 
 
-def test_segmented_append_read_equivalence(spark, sf_dir, tmp_path):
+def test_segmented_append_read_equivalence(spark, sf_dir, tmp_path, monkeypatch):
     src = _events(spark, sf_dir)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path)
+    t = _mk(spark, tmp_path, monkeypatch)
     for i in range(3):
         t.append(
             src.filter(F.col("event_id") % 3 == i),
@@ -87,11 +92,11 @@ def test_segmented_append_read_equivalence(spark, sf_dir, tmp_path):
     assert t.append(src.limit(5), checkpoint_key="ck-1") == v  # no-op redelivery
 
 
-def test_append_only_commit_keeps_old_segments(spark, sf_dir, tmp_path):
+def test_append_only_commit_keeps_old_segments(spark, sf_dir, tmp_path, monkeypatch):
     """The O(delta) property: an append must not rewrite prior segments."""
     src = _events(spark, sf_dir)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path)
+    t = _mk(spark, tmp_path, monkeypatch)
     t.append(src.filter(F.col("event_id") % 2 == 0), stat_cols=["event_id"])
     segs_before = set(_seg_files(t))
     refs_before = {r["path"] for r in _raw_manifest(t)["file_segments"]}
@@ -103,10 +108,10 @@ def test_append_only_commit_keeps_old_segments(spark, sf_dir, tmp_path):
     assert segs_before <= set(_seg_files(t))
 
 
-def test_removal_rewrites_only_touched_segments(spark, sf_dir, tmp_path):
+def test_removal_rewrites_only_touched_segments(spark, sf_dir, tmp_path, monkeypatch):
     src = _events(spark, sf_dir)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path)
+    t = _mk(spark, tmp_path, monkeypatch)
     t.append(src.filter(F.col("event_id") % 2 == 0), stat_cols=["event_id"])
     keep_ref = _raw_manifest(t)["file_segments"][0]["path"]
     t.append(src.filter(F.col("event_id") % 2 == 1), stat_cols=["event_id"])
@@ -119,10 +124,10 @@ def test_removal_rewrites_only_touched_segments(spark, sf_dir, tmp_path):
     assert t.read().count() == total - removed_rows
 
 
-def test_time_travel_and_rollback_across_segments(spark, sf_dir, tmp_path):
+def test_time_travel_and_rollback_across_segments(spark, sf_dir, tmp_path, monkeypatch):
     src = _events(spark, sf_dir)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path)
+    t = _mk(spark, tmp_path, monkeypatch)
     t.append(src.filter(F.col("event_id") % 2 == 0), checkpoint_key="a")
     v1 = t.current_version()
     n1 = t.read().count()
@@ -134,13 +139,13 @@ def test_time_travel_and_rollback_across_segments(spark, sf_dir, tmp_path):
     assert "a" in t.committed()
 
 
-def test_committed_tail_seals_into_segments(spark, sf_dir, tmp_path):
+def test_committed_tail_seals_into_segments(spark, sf_dir, tmp_path, monkeypatch):
     """Past the tail cap, committed keys seal into immutable segments and
     the head carries only the recent tail — yet the hydrated set is full
     and redelivery of ANY old key stays a no-op."""
     src = _events(spark, sf_dir, n=40)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path)
+    t = _mk(spark, tmp_path, monkeypatch)
     for i in range(10):  # tail cap is 4 → several seals
         t.append(src.limit(2), checkpoint_key=f"ck-{i:02d}")
     raw = _raw_manifest(t)
@@ -151,18 +156,13 @@ def test_committed_tail_seals_into_segments(spark, sf_dir, tmp_path):
     assert t.append(src.limit(2), checkpoint_key="ck-00") == v  # sealed key skips
 
 
-def test_auto_upgrade_at_threshold(spark, sf_dir, tmp_path):
-    """With no property set, a table auto-segments once its inline file
-    list crosses the threshold (and stays inline below it)."""
+def test_auto_upgrade_at_threshold(spark, sf_dir, tmp_path, monkeypatch):
+    """A table auto-segments once its inline file list crosses the
+    threshold (and stays inline below it)."""
     src = _events(spark, sf_dir, n=60)
     _SCHEMA_CACHE[0] = src.schema
-    t = LakeTable.create(
-        spark,
-        str(tmp_path / "auto"),
-        src.schema,
-        PartitionSpec(),
-        properties={"manifest.segment_threshold": "6"},
-    )
+    monkeypatch.setattr(fmt, "_AUTO_SEGMENT_FILES", 6)
+    t = LakeTable.create(spark, str(tmp_path / "auto"), src.schema, PartitionSpec())
     t.append(src.limit(10).repartition(3))
     assert "file_segments" not in _raw_manifest(t)  # 3 files: inline
     t.append(src.limit(20).repartition(5))
@@ -172,10 +172,10 @@ def test_auto_upgrade_at_threshold(spark, sf_dir, tmp_path):
     assert t.read().count() == 30
 
 
-def test_vacuum_gc_orphan_segments_keeps_referenced(spark, sf_dir, tmp_path):
+def test_vacuum_gc_orphan_segments_keeps_referenced(spark, sf_dir, tmp_path, monkeypatch):
     src = _events(spark, sf_dir)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path)
+    t = _mk(spark, tmp_path, monkeypatch)
     t.append(src.filter(F.col("event_id") % 2 == 0), stat_cols=["event_id"])
     t.append(src.filter(F.col("event_id") % 2 == 1), stat_cols=["event_id"])
     t.compact(target_file_bytes=1 << 30)  # drops all old segment refs at head
@@ -199,10 +199,10 @@ def test_vacuum_gc_orphan_segments_keeps_referenced(spark, sf_dir, tmp_path):
     assert t.lineage_df().count() > 0
 
 
-def test_fsck_missing_segment_detected(spark, sf_dir, tmp_path):
+def test_fsck_missing_segment_detected(spark, sf_dir, tmp_path, monkeypatch):
     src = _events(spark, sf_dir)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path)
+    t = _mk(spark, tmp_path, monkeypatch)
     t.append(src.limit(20))
     ref = _raw_manifest(t)["file_segments"][0]["path"]
     os.rename(os.path.join(t.path, ref), os.path.join(t.path, ref) + ".bak")
@@ -212,10 +212,10 @@ def test_fsck_missing_segment_detected(spark, sf_dir, tmp_path):
     assert "missing-segment" not in {i["kind"] for i in t.fsck()}
 
 
-def test_branch_publish_with_segments(spark, sf_dir, tmp_path):
+def test_branch_publish_with_segments(spark, sf_dir, tmp_path, monkeypatch):
     src = _events(spark, sf_dir)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path)
+    t = _mk(spark, tmp_path, monkeypatch)
     t.append(src.filter(F.col("event_id") % 2 == 0))
     b = t.create_branch("wap")
     b.append(src.filter(F.col("event_id") % 2 == 1))
@@ -224,13 +224,13 @@ def test_branch_publish_with_segments(spark, sf_dir, tmp_path):
     assert t.read().count() == src.count()
 
 
-def test_segment_compaction_bounds_segment_count(spark, sf_dir, tmp_path):
+def test_segment_compaction_bounds_segment_count(spark, sf_dir, tmp_path, monkeypatch):
     """Many tiny commits must not accumulate unbounded segment refs: past
     max_segments the smallest segments merge (LSM-style), keeping the
     per-commit segment-list walk bounded."""
     src = _events(spark, sf_dir, n=64)
     _SCHEMA_CACHE[0] = src.schema
-    t = _mk(spark, tmp_path, props={"manifest.max_segments": "5"})
+    t = _mk(spark, tmp_path, monkeypatch, _MAX_SEGMENTS=5)
     for i in range(12):
         t.append(src.filter(F.col("event_id") % 12 == i))
     raw = _raw_manifest(t)
@@ -239,7 +239,7 @@ def test_segment_compaction_bounds_segment_count(spark, sf_dir, tmp_path):
     assert t.read().count() == src.count()
 
 
-def test_segmented_merge_pipeline_equals_inline(spark, sf_dir, tmp_path):
+def test_segmented_merge_pipeline_equals_inline(spark, sf_dir, tmp_path, monkeypatch):
     """End-to-end: a CDC replay into a segmented table produces the exact
     same final state as into an inline-manifest table."""
     from airbyte_spark.sources.changelog import derive_changelog
@@ -250,9 +250,8 @@ def test_segmented_merge_pipeline_equals_inline(spark, sf_dir, tmp_path):
 
     pin = CdcPipeline.create_target(spark, str(tmp_path / "inline"), n_buckets=4)
     pin.replay(changelog)
+    _segmented(monkeypatch)
     pseg = CdcPipeline.create_target(spark, str(tmp_path / "seg"), n_buckets=4)
-    for k, v in SEGPROPS.items():
-        pseg.table._update_properties({k: v}, set(), "segment-props")
     pseg.replay(changelog)
 
     assert _raw_manifest(pseg.table).get("file_segments")

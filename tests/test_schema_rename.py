@@ -118,3 +118,28 @@ def test_legacy_manifest_without_field_ids_still_reads(spark, sf_dir, tmp_path):
         src.withColumn("extra", F.lit(1).cast("long")).schema
     )
     assert t.read().filter(F.col("extra").isNull()).count() == 30
+
+
+def test_rename_on_legacy_manifest_keeps_values(spark, sf_dir, tmp_path):
+    """A rename on a manifest without field ids must first store identity
+    ids for the schema the existing files were written under; otherwise
+    those files fall back to name alignment and the renamed column reads
+    all-NULL."""
+    import json
+    import os
+
+    src = _events(spark, sf_dir)
+    t = LakeTable.create(spark, str(tmp_path / "t"), src.schema, PartitionSpec())
+    t.append(src.limit(30), checkpoint_key="b0")
+    p = t._manifest_path(t.current_version())
+    with open(p) as fh:
+        m = json.load(fh)
+    m.pop("field_ids", None)
+    os.remove(p)
+    with open(p, "w") as fh:
+        json.dump(m, fh)
+    before = t.read().filter(F.col("value").isNotNull()).count()
+    assert before == 30
+
+    t.rename_column("value", "score")
+    assert t.read().filter(F.col("score").isNotNull()).count() == before
