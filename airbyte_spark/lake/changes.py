@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 
 from airbyte_spark.lake import format as _fmt
 from airbyte_spark.lake.format import LakeTable
+from airbyte_spark.lake.table_format import empty_frame, scan_files
 
 CHANGE_TYPE_COL = "_change_type"
 
@@ -115,11 +116,11 @@ def row_changes(
         pre = table.read(
             at_version, files=[entry_map[t] for t in targets], with_positions=True
         )
-        dmap = (
-            spark.read.schema("file string, pos long")
-            .parquet(*[_os.path.join(table.path, d["path"]) for d in dvs])
-            .toDF("__dv_anti_file", "__dv_anti_pos")
-        )
+        dmap = scan_files(
+            spark,
+            [_os.path.join(table.path, d["path"]) for d in dvs],
+            "file string, pos long",
+        ).toDF("__dv_anti_file", "__dv_anti_pos")
         cond = (_F.col("_dv_file") == _F.col("__dv_anti_file")) & (
             _F.col("_dv_pos") == _F.col("__dv_anti_pos")
         )
@@ -173,11 +174,11 @@ def row_changes(
         # pairs here or the change feed would emit the event twice.
         anti = None
         if dv_overlap:
-            anti = (
-                spark.read.schema("file string, pos long")
-                .parquet(*[_os.path.join(table.path, d["path"]) for d in dv_overlap])
-                .toDF("__dv_anti_file", "__dv_anti_pos")
-            )
+            anti = scan_files(
+                spark,
+                [_os.path.join(table.path, d["path"]) for d in dv_overlap],
+                "file string, pos long",
+            ).toDF("__dv_anti_file", "__dv_anti_pos")
         outs = None
         for d in dlist:
             files = [
@@ -204,7 +205,7 @@ def row_changes(
                     & (_F.col("_dv_pos") == _F.col("__dv_anti_pos")),
                     "left_anti",
                 )
-            kdf = spark.read.parquet(_os.path.join(table.path, d["path"])).select(
+            kdf = scan_files(spark, [_os.path.join(table.path, d["path"])]).select(
                 *[
                     _F.col(stored).alias(f"__eq_{cur}")
                     for stored, cur in zip(d["cols"], names)
@@ -244,19 +245,11 @@ def row_changes(
         return df
 
     if not removed and not added:
-        empty = spark.createDataFrame([], schema)
+        empty = empty_frame(spark, schema)
         return _with_dv(empty.withColumn(CHANGE_TYPE_COL, F.lit("")))
 
-    old = (
-        table.read(v_from, files=removed)
-        if removed
-        else spark.createDataFrame([], schema)
-    )
-    new = (
-        table.read(v_to, files=added)
-        if added
-        else spark.createDataFrame([], schema)
-    )
+    old = table.read(v_from, files=removed) if removed else empty_frame(spark, schema)
+    new = table.read(v_to, files=added) if added else empty_frame(spark, schema)
 
     # schema may have evolved between versions; align by name, NULL-fill
     old = old.select(

@@ -44,6 +44,7 @@ from airbyte_spark.lake.format import (
     _align,
     _collect_parquet_stats,
 )
+from airbyte_spark.lake.table_format import empty_frame, scan_files
 from airbyte_spark.schema import evolve
 
 _LOG_DIR = "_delta_log"
@@ -201,7 +202,7 @@ class DeltaLogTable:
         target = self.schema(version)
         entries = files if files is not None else self.files(version)
         if not entries:
-            return self.spark.createDataFrame([], target)
+            return empty_frame(self.spark, target)
         # schema generations: read each with its written schema, align up
         st = self._state(version)["meta"]
         by_sid: dict[int, list[FileEntry]] = {}
@@ -210,8 +211,8 @@ class DeltaLogTable:
         out = None
         for sid, group in sorted(by_sid.items()):
             written = StructType.fromJson(st["schemas"][str(sid)])
-            df = self.spark.read.schema(written).parquet(
-                *[os.path.join(self.path, e.path) for e in group]
+            df = scan_files(
+                self.spark, [os.path.join(self.path, e.path) for e in group], written
             )
             part = _align(df, target)
             out = part if out is None else out.unionByName(part)

@@ -474,10 +474,7 @@ def delete_positions(
         md = pq.ParquetFile(abs_p).metadata
         if md.num_rows == 0:
             continue
-        targets = sorted(
-            r["file"]
-            for r in table.spark.read.parquet(abs_p).select("file").distinct().collect()
-        )
+        targets = sorted(set(pq.read_table(abs_p, columns=["file"])["file"].to_pylist()))
         entry = {
             "path": f"{rel_dir}/{name}",
             "rows": md.num_rows,

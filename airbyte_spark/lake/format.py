@@ -979,6 +979,9 @@ class LakeTable:
         ever being rewritten. `with_positions=True` additionally exposes
         (_dv_file relative path, _dv_pos) helper columns, post-delete, for
         the position-delete writer itself."""
+        # table_format imports this module, so its scan helpers load here
+        from airbyte_spark.lake.table_format import empty_frame, scan_files
+
         m = self.manifest(version)
         target = StructType.fromJson(m["schemas"][str(m["schema_id"])])
         all_ids = m.get("field_ids") or {}
@@ -994,7 +997,7 @@ class LakeTable:
         }
         entries = files if files is not None else [FileEntry.from_json(d) for d in m["files"]]
         if not entries:
-            df = self.spark.createDataFrame([], target)
+            df = empty_frame(self.spark, target)
             if with_positions:
                 df = df.withColumn(_DV_FILE, F.lit(None).cast("string")).withColumn(
                     _DV_POS, F.lit(None).cast("bigint")
@@ -1028,7 +1031,7 @@ class LakeTable:
         parts = []
         for (sid, era), paths in by_schema.items():
             written = StructType.fromJson(m["schemas"][str(sid)])
-            df = self.spark.read.schema(written).parquet(*paths)
+            df = scan_files(self.spark, paths, written)
             if need_pos:
                 # relative file path + in-file row position (parquet row
                 # tracking via the _metadata struct — no data rewrite)
@@ -1064,7 +1067,7 @@ class LakeTable:
                 ckey = (d["path"], tuple(names))
                 if ckey not in eq_dfs:
                     ap = os.path.join(self.path, d["path"])
-                    eq_dfs[ckey] = self.spark.read.parquet(ap).select(
+                    eq_dfs[ckey] = scan_files(self.spark, [ap]).select(
                         *[
                             F.col(stored).alias(f"__eq_{cur}")
                             for stored, cur in zip(d["cols"], names)
@@ -1092,11 +1095,11 @@ class LakeTable:
         if dvs:
             # alias to collision-proof names: a user column named "file" or
             # "pos" must not make the join condition ambiguous
-            dmap = (
-                self.spark.read.schema("file string, pos long")
-                .parquet(*[os.path.join(self.path, d["path"]) for d in dvs])
-                .toDF("__dv_anti_file", "__dv_anti_pos")
-            )
+            dmap = scan_files(
+                self.spark,
+                [os.path.join(self.path, d["path"]) for d in dvs],
+                "file string, pos long",
+            ).toDF("__dv_anti_file", "__dv_anti_pos")
             cond = (F.col(_DV_FILE) == F.col("__dv_anti_file")) & (
                 F.col(_DV_POS) == F.col("__dv_anti_pos")
             )

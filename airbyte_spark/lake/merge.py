@@ -556,9 +556,8 @@ def resolve_stored(table: TableFormat, cfg: StreamConfig, version: int | None = 
     df = table.read(version)
     bucket = _bucket_field(table, cfg.primary_key[0])
     sub_k = _window_sub_split(table, bool(bucket), bucket.n if bucket else 1)
-    empty = table.spark.createDataFrame([], df.schema)
     return resolve_merge(
-        empty,
+        None,
         df,
         cfg,
         df.columns,
@@ -596,7 +595,7 @@ def compact_versions(table: TableFormat, cfg: StreamConfig) -> int:
 
 
 def resolve_merge(
-    existing: DataFrame,
+    existing: DataFrame | None,
     batch: DataFrame,
     cfg: StreamConfig,
     out_cols: list[str],
@@ -631,9 +630,10 @@ def resolve_merge(
     pk_cols = cfg.primary_key
     order_cols = cfg.order_cols  # e.g. [warc_ts, _ab_cdc_lsn]
 
-    e = existing.withColumn("_is_batch", F.lit(0))
-    b = batch.withColumn("_is_batch", F.lit(1))
-    both = e.unionByName(b, allowMissingColumns=True)
+    both = batch.withColumn("_is_batch", F.lit(1))
+    if existing is not None:
+        e = existing.withColumn("_is_batch", F.lit(0))
+        both = e.unionByName(both, allowMissingColumns=True)
 
     part = (bucket_expr if bucket_expr is not None else F.lit(0)).alias("_mb")
     both = both.withColumn("_mb", part)

@@ -96,23 +96,28 @@ def _q(ident: str) -> str:
     return f'"{ident}"'
 
 
-def discover_sql_schema(db_path: str, table: str) -> StructType:
+def discover_sql_schema(db_path: str, table: str, schema: str | None = None) -> StructType:
     """The discover step (≡ AbstractJdbcSource.discoverInternal): column
-    names + types from information_schema, in ordinal order."""
+    names + types from information_schema, in ordinal order. `schema`
+    names the database schema holding `table` (default: the connection's
+    current schema, the one an unqualified `FROM table` reads)."""
     import duckdb
 
     con = duckdb.connect(db_path, read_only=True)
     try:
+        if schema is None:
+            schema = con.execute("SELECT current_schema()").fetchone()[0]
         rows = con.execute(
             "SELECT column_name, data_type, is_nullable "
-            "FROM information_schema.columns WHERE table_name = ? "
+            "FROM information_schema.columns "
+            "WHERE table_name = ? AND table_schema = ? "
             "ORDER BY ordinal_position",
-            [table],
+            [table, schema],
         ).fetchall()
     finally:
         con.close()
     if not rows:
-        raise ValueError(f"table {table!r} not found in {db_path}")
+        raise ValueError(f"table {schema}.{table} not found in {db_path}")
     return StructType(
         [
             StructField(name, _spark_type(t), nullable != "NO")
@@ -196,9 +201,12 @@ def read_sql_table(
     if query_log is not None:
         query_log.extend(queries)
 
-    parts = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(queries)], "part int, q string"
-    ).repartition(len(queries), "part")
+    # one query per task: range(n) over n slices puts row i alone in
+    # partition i, where a hash repartition can give one task two queries
+    n_q = len(queries)
+    parts = spark.range(0, n_q, 1, n_q).select(
+        F.element_at(F.array(*map(F.lit, queries)), F.col("id").cast("int") + 1).alias("q")
+    )
     names = [f.name for f in schema.fields]
 
     def fetch(batches):

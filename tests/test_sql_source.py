@@ -127,3 +127,38 @@ def test_sql_source_incremental_ships_only_post_cursor_rows(db, sf_dir, spark):
     assert inc.agg(F.min("warc_ts")).first()[0] > cut
     n_all = full.count()
     assert 0 < inc.count() < n_all
+
+
+def test_each_partition_task_runs_exactly_one_query(spark, tmp_path):
+    """The stride queries are laid out one per Spark partition. Every
+    stride below holds rows, so n non-empty partitions out of n queries
+    means no task ran two queries while another ran none."""
+    path = str(tmp_path / "ids.duckdb")
+    con = duckdb.connect(path)
+    con.execute("CREATE TABLE ids AS SELECT range::INTEGER AS id FROM range(80)")
+    con.close()
+    for n in range(2, 9):
+        log: list = []
+        got = read_sql_table(
+            spark, path, "ids", partition_column="id", num_partitions=n, query_log=log
+        )
+        assert len(log) == n
+        sizes = got.rdd.glom().map(len).collect()
+        assert len(sizes) == n and all(s > 0 for s in sizes), (n, sizes)
+        assert sum(sizes) == 80
+
+
+def test_discover_is_schema_qualified(tmp_path):
+    """Same-named tables in two database schemas discover separately; the
+    default is the connection's current schema."""
+    path = str(tmp_path / "schemas.duckdb")
+    con = duckdb.connect(path)
+    con.execute("CREATE TABLE t (x BIGINT)")
+    con.execute("CREATE SCHEMA other")
+    con.execute("CREATE TABLE other.t (a VARCHAR, b INTEGER)")
+    con.close()
+    assert discover_sql_schema(path, "t").fieldNames() == ["x"]
+    assert discover_sql_schema(path, "t", "main").fieldNames() == ["x"]
+    assert discover_sql_schema(path, "t", "other").fieldNames() == ["a", "b"]
+    with pytest.raises(ValueError, match="not found"):
+        discover_sql_schema(path, "t", "nope")
