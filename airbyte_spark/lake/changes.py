@@ -35,8 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from airbyte_spark.lake import format as _fmt
-from airbyte_spark.lake.format import LakeTable
-from airbyte_spark.lake.table_format import empty_frame, scan_files
+from airbyte_spark.lake.format import LakeTable, empty_frame, scan_files
 
 CHANGE_TYPE_COL = "_change_type"
 

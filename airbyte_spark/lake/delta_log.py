@@ -43,8 +43,9 @@ from airbyte_spark.lake.format import (
     PartitionSpec,
     _align,
     _collect_parquet_stats,
+    empty_frame,
+    scan_files,
 )
-from airbyte_spark.lake.table_format import empty_frame, scan_files
 from airbyte_spark.schema import evolve
 
 _LOG_DIR = "_delta_log"

@@ -47,6 +47,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
@@ -979,9 +980,6 @@ class LakeTable:
         ever being rewritten. `with_positions=True` additionally exposes
         (_dv_file relative path, _dv_pos) helper columns, post-delete, for
         the position-delete writer itself."""
-        # table_format imports this module, so its scan helpers load here
-        from airbyte_spark.lake.table_format import empty_frame, scan_files
-
         m = self.manifest(version)
         target = StructType.fromJson(m["schemas"][str(m["schema_id"])])
         all_ids = m.get("field_ids") or {}
@@ -2253,6 +2251,45 @@ def _align(
         else:
             cols.append(F.col(f.name))
     return df.select(*cols, *[F.col(c) for c in extra])
+
+
+# Spark lists a read's root paths in a distributed job (one task per path)
+# once there are more of them than this threshold. Manifest reads name
+# local leaf files the driver stats in ~0.25 ms each, so that job is pure
+# overhead (measured on a 4-core host: ~1 s at 96 files, ~20 s at 4,000).
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
+
+
+def scan_files(
+    spark: SparkSession, paths: "list[str]", schema: "StructType | str | None" = None
+) -> DataFrame:
+    """Parquet relation over known leaf files (≡ an Iceberg scan planned
+    from its manifest, never from a storage listing). Spark lists eagerly,
+    while the relation is built, so the listing threshold is raised to
+    cover `paths` for this one call and restored after it; the lock keeps
+    concurrent readers from restoring each other's raised value."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    with _LISTING_LOCK:
+        prev = spark.conf.get(_LISTING_THRESHOLD, None)
+        spark.conf.set(_LISTING_THRESHOLD, str(max(len(paths), int(prev or 0))))
+        try:
+            return reader.parquet(*paths)
+        finally:
+            if prev is None:
+                spark.conf.unset(_LISTING_THRESHOLD)
+            else:
+                spark.conf.set(_LISTING_THRESHOLD, prev)
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """Zero rows of `schema` as a JVM-side relation: typed NULL columns
+    over `range(1).limit(0)`, which the optimizer folds to an empty local
+    relation (a union drops it outright), so no Python RDD and no Python
+    task is built."""
+    return spark.range(1).limit(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
 
 
 def _zvalue_expr(df: DataFrame, cols: list[str], bits: int) -> "F.Column":

@@ -604,7 +604,8 @@ def resolve_merge(
 ) -> DataFrame:
     """Pure-DataFrame restatement of the MERGE cases as ONE window pass.
 
-    union(existing tagged 0, batch tagged 1), hash-clustered by
+    union(existing tagged 0, batch tagged 1) — with `existing=None` only
+    the batch is windowed, no union (resolve_stored) — hash-clustered by
     (key-bucket, key-hash salt), sorted (key asc, cursor desc, lsn desc,
     is_batch desc); a row wins its key group iff the previous row in that
     order has a different key (lag-based group-head detection — no second

@@ -36,63 +36,25 @@ exactly Iceberg's write model, which is what makes the swap safe.
 
 from __future__ import annotations
 
-import threading
 from typing import TYPE_CHECKING, Protocol, runtime_checkable
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-# The interchange records of the seam (file entries, partition specs) are
-# defined next to the default implementation and re-exported here: callers
-# of the PROTOCOL import them from this module.
+# The interchange records of the seam (file entries, partition specs) and
+# the shared read helpers are defined next to the default implementation
+# and re-exported here: callers of the PROTOCOL import them from this module.
 from airbyte_spark.lake.format import (  # noqa: F401  (re-exports)
     FileEntry,
     LakeTable,
     PartitionSpec,
+    empty_frame,
+    scan_files,
 )
 from airbyte_spark.lake.format import _align as align_to_schema  # noqa: F401
 
 if TYPE_CHECKING:
     pass
-
-# Spark lists a read's root paths in a distributed job (one task per path)
-# once there are more of them than this threshold. Manifest reads name
-# local leaf files the driver stats in ~0.25 ms each, so that job is pure
-# overhead (measured on a 4-core host: ~1 s at 96 files, ~20 s at 4,000).
-_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-_LISTING_LOCK = threading.Lock()
-
-
-def scan_files(
-    spark: SparkSession, paths: "list[str]", schema: "StructType | str | None" = None
-) -> DataFrame:
-    """Parquet relation over known leaf files (≡ an Iceberg scan planned
-    from its manifest, never from a storage listing). Spark lists eagerly,
-    while the relation is built, so the listing threshold is raised to
-    cover `paths` for this one call and restored after it; the lock keeps
-    concurrent readers from restoring each other's raised value."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    with _LISTING_LOCK:
-        prev = spark.conf.get(_LISTING_THRESHOLD, None)
-        spark.conf.set(_LISTING_THRESHOLD, str(max(len(paths), int(prev or 0))))
-        try:
-            return reader.parquet(*paths)
-        finally:
-            if prev is None:
-                spark.conf.unset(_LISTING_THRESHOLD)
-            else:
-                spark.conf.set(_LISTING_THRESHOLD, prev)
-
-
-def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
-    """Zero rows of `schema` as a JVM-side relation: typed NULL columns
-    over `range(1).limit(0)`, which the optimizer folds to an empty local
-    relation (a union drops it outright), so no Python RDD and no Python
-    task is built."""
-    return spark.range(1).limit(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
 
 
 @runtime_checkable

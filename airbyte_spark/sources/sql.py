@@ -96,28 +96,27 @@ def _q(ident: str) -> str:
     return f'"{ident}"'
 
 
-def discover_sql_schema(db_path: str, table: str, schema: str | None = None) -> StructType:
+def discover_sql_schema(db_path: str, table: str) -> StructType:
     """The discover step (≡ AbstractJdbcSource.discoverInternal): column
-    names + types from information_schema, in ordinal order. `schema`
-    names the database schema holding `table` (default: the connection's
-    current schema, the one an unqualified `FROM table` reads)."""
+    names + types from information_schema, in ordinal order, for the table
+    in the connection's current schema — the one an unqualified
+    `FROM table` reads, so a same-named table in another schema never
+    mixes in its columns."""
     import duckdb
 
     con = duckdb.connect(db_path, read_only=True)
     try:
-        if schema is None:
-            schema = con.execute("SELECT current_schema()").fetchone()[0]
         rows = con.execute(
             "SELECT column_name, data_type, is_nullable "
             "FROM information_schema.columns "
-            "WHERE table_name = ? AND table_schema = ? "
+            "WHERE table_name = ? AND table_schema = current_schema() "
             "ORDER BY ordinal_position",
-            [table, schema],
+            [table],
         ).fetchall()
     finally:
         con.close()
     if not rows:
-        raise ValueError(f"table {schema}.{table} not found in {db_path}")
+        raise ValueError(f"table {table!r} not found in {db_path}")
     return StructType(
         [
             StructField(name, _spark_type(t), nullable != "NO")

@@ -1,7 +1,7 @@
 """Manifest reads build their relations without Spark jobs.
 
 The manifest already names every live file, so a read hands Spark known
-leaf files (lake/table_format.scan_files): Spark lists them on the driver
+leaf files (lake/format.scan_files): Spark lists them on the driver
 instead of in a distributed job with one task per path, and the session's
 listing threshold is back at its old value after every read. A merge-on-
 read resolve and an empty-file read build no Python RDD either."""
@@ -197,6 +197,6 @@ def _parquet_reads_outside_helper() -> list[str]:
 def test_lake_parquet_reads_go_through_scan_files():
     hits = _parquet_reads_outside_helper()
     assert hits == [], (
-        "parquet reads outside lake/table_format.scan_files bring back "
+        "parquet reads outside lake/format.scan_files bring back "
         f"Spark's distributed file listing: {hits}"
     )

@@ -148,17 +148,17 @@ def test_each_partition_task_runs_exactly_one_query(spark, tmp_path):
         assert sum(sizes) == 80
 
 
-def test_discover_is_schema_qualified(tmp_path):
-    """Same-named tables in two database schemas discover separately; the
-    default is the connection's current schema."""
+def test_discover_reads_only_the_current_schema(tmp_path):
+    """A same-named table in another database schema does not mix its
+    columns into the discovered schema: discover sees the table an
+    unqualified `FROM t` reads."""
     path = str(tmp_path / "schemas.duckdb")
     con = duckdb.connect(path)
     con.execute("CREATE TABLE t (x BIGINT)")
     con.execute("CREATE SCHEMA other")
     con.execute("CREATE TABLE other.t (a VARCHAR, b INTEGER)")
+    con.execute("CREATE TABLE other.only_there (y INTEGER)")
     con.close()
     assert discover_sql_schema(path, "t").fieldNames() == ["x"]
-    assert discover_sql_schema(path, "t", "main").fieldNames() == ["x"]
-    assert discover_sql_schema(path, "t", "other").fieldNames() == ["a", "b"]
     with pytest.raises(ValueError, match="not found"):
-        discover_sql_schema(path, "t", "nope")
+        discover_sql_schema(path, "only_there")
